@@ -4,11 +4,16 @@ edge sets that diverge from the Python generators'. The JavaRandom
 reimplementation + Scala-mode generators must reproduce the published
 iteration and component counts for all 34 configs — validated through
 the pure-Python CCF fixed point (itself property-tested bit-identical
-to the distributed loop in test_ccf_local.py). No Spark needed."""
+to the distributed loop in test_ccf_local.py). No Spark needed.
+
+The published CSV is read from the reference checkout (``SCALA_CSV``).
+Where that file is absent, the 34-row sweep is reported as skipped, not
+passed; the JavaRandom sequence and edge-shape tests still run."""
 
 from __future__ import annotations
 
 import csv
+import os
 
 import pytest
 
@@ -26,6 +31,17 @@ SCALA_CSV = "/root/reference/experiment_results_scala.csv"
 def _published():
     with open(SCALA_CSV) as f:
         return list(csv.DictReader(f))
+
+
+def _sweep_params():
+    if not os.path.exists(SCALA_CSV):
+        return [pytest.param(None, id="missing-csv")]
+    return [
+        pytest.param(r, id=(
+            f"{r['experiment']}-{r['nodes']}-{r['edges']}-{r['algorithm']}"
+        ))
+        for r in _published()
+    ]
 
 
 def _components(pairs: list[tuple[str, str]], edges) -> int:
@@ -52,9 +68,11 @@ def test_scala_random_graph_shape():
     assert all(int(a) < int(b) for a, b in edges)
 
 
-@pytest.mark.parametrize("row", _published(), ids=lambda r: (
-    f"{r['experiment']}-{r['nodes']}-{r['edges']}-{r['algorithm']}"
-))
+@pytest.mark.skipif(
+    not os.path.exists(SCALA_CSV),
+    reason=f"published Scala sweep needs {SCALA_CSV}",
+)
+@pytest.mark.parametrize("row", _sweep_params())
 def test_scala_sweep_parity(row):
     exp = row["experiment"]
     if exp == "random_graph":

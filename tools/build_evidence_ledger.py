@@ -9,6 +9,11 @@ the repo checkout still orders by evidence. Run after each driver
 round lands new CORRECTNESS files:
 
     python tools/build_evidence_ledger.py
+
+Commit the regenerated ``evidence_ledger.json`` together with the new
+``CORRECTNESS_r*.json``: ``tests/test_registry_evidence.py`` checks the
+snapshot against the root files, and round 13's file once landed
+without a rebuild, which left that test red.
 """
 
 from __future__ import annotations
