@@ -1343,25 +1343,38 @@ def unigram_train(
     corpus scale. Every comparison is BIGINT/string, so a DuckDB
     oracle replays training exactly.
 
-    Tie-break correctness note: two partial segmentations pruned at
-    the same (word, position, step) cover the same characters with
-    the same number of separators, hence EQUAL string lengths — so
-    the prefix anomaly of lexicographic comparison under later
-    concatenation cannot occur and per-position pruning preserves the
-    global minimum.
+    Tie-break correctness note: the DP keeps, for every prefix length
+    p of a word, the single best (n_pieces, -score, seg) struct, and
+    ``array_min`` over the candidate structs applies the objective's
+    total order field by field. Pruning per prefix preserves the
+    global minimum: two partial segmentations competing at the same p
+    with the same piece count cover the same characters with the same
+    number of separators, hence have EQUAL string lengths — so the
+    prefix anomaly of lexicographic comparison under later
+    concatenation cannot occur — and a smaller piece count or a larger
+    score wins whatever suffix follows.
 
     Scale shape: ONE corpus pass builds the distinct-word table
     (vocab-bounded, like build_vocab); everything after — candidate
-    pieces, DP states (<= vocab x max word length rows), per-round
-    counts — is vocabulary-sized, never corpus-sized. The DP loop
-    runs max-word-length joins per round on that tiny state, with
-    per-generation checkpoint release (O9 discipline).
+    pieces and per-round counts — is vocabulary-sized, never
+    corpus-sized. Each EM round is one pipeline with no step loop: the
+    candidates join the broadcast piece counts (one row per distinct
+    piece of <= ``max_piece_len`` characters), ``groupBy(word)``
+    collects them into one row per word, and the Viterbi DP runs
+    inside that row as an ``aggregate`` over positions 1..wlen that
+    reads only the <= ``max_piece_len`` candidates ending at each
+    position. A round therefore costs a fixed handful of jobs (the
+    counts' shuffle and broadcast, the E-step's shuffle and
+    checkpoint) whatever the longest word, O(wlen x max_piece_len)
+    work per word, and no session-conf change. Only each round's
+    ``best`` is checkpointed: the M-step's counts stay lazy and are
+    computed inside the next round's broadcast. Each round releases
+    the previous round's ``best``, and the word table is released
+    once the last round no longer needs it.
 
     Output: one row per distinct word after the final round:
     (word, wfreq, n_pieces, seg, score) with seg '|'-joined.
     """
-    from pyspark.sql.window import Window
-
     from map_reduce_project_spark.graph.checkpointing import (
         CheckpointCycler,
     )
@@ -1370,7 +1383,11 @@ def unigram_train(
         raise ValueError(
             f"unigram_train: n_rounds must be >= 1, got {n_rounds}"
         )
-    spark = docs.sparkSession
+    if max_piece_len < 1:
+        raise ValueError(
+            "unigram_train: max_piece_len must be >= 1, got "
+            f"{max_piece_len}"
+        )
     words = (
         docs.select(
             F.explode(F.split(F.col(text_col), " ")).alias("word")
@@ -1378,198 +1395,86 @@ def unigram_train(
         .where(F.length("word") >= 1)
         .groupBy("word")
         .agg(F.count("*").alias("wfreq"))
-        .withColumn("wlen", F.length("word").cast("int"))
         .localCheckpoint(eager=True)
     )
-    max_len = words.agg(F.max("wlen")).collect()[0][0]
-    if max_len is None:
-        return spark.createDataFrame(
-            [],
-            "word string, wfreq long, n_pieces long, seg string, "
-            "score long",
-        )
-    subs = (
-        words.select(
-            "word",
-            "wfreq",
-            "wlen",
-            F.explode_outer(
-                F.expr(
-                    f"flatten(transform(sequence(1, length(word)), i -> "
-                    f"transform(sequence(1, least({max_piece_len}, "
-                    f"length(word) - i + 1)), L -> "
-                    f"struct(i as start, substring(word, i, L) as piece, "
-                    f"L as plen))))"
-                )
-            ).alias("s"),
-        )
-        .where(F.col("s").isNotNull())
-        .select(
-            "word", "wfreq", "wlen", "s.start", "s.piece", "s.plen"
-        )
-        .localCheckpoint(eager=True)
-    )
-    counts = (
-        subs.groupBy("piece")
-        .agg(F.sum("wfreq").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-
-    # TWO cyclers: DP steps claim (states, finished) only; round-level
-    # artifacts (best, counts) live across the NEXT round's whole DP
-    # (scored_subs references counts lazily every step), so they are
-    # claimed on a separate generation track released one round later.
-    step_cycler = CheckpointCycler(spark)
-    round_cycler = CheckpointCycler(spark)
-    # DP shuffle sizing (optimization round 13, guide §2 "make
-    # partitioning scale-adaptive"): every step joins and windows
-    # VOCAB-bounded state (<= |subs| rows), but each of the loop's
-    # ~3 jobs per step inherits the session's corpus-sized shuffle
-    # partition count — at the 50k-word bench vocab that is ~40 jobs
-    # of 32 near-empty tasks each, pure scheduling overhead (measured
-    # interleaved: 10.1 s -> 8.6 s warm at the capstone corpus).
-    # Size partitions from the MEASURED subs cardinality (~50k rows
-    # per task), never above the session value — a 100M-word crawl
-    # vocabulary keeps full parallelism, a demo vocabulary stops
-    # paying 32 task launches per tiny job. Restored in the finally.
-    _sp_key = "spark.sql.shuffle.partitions"
-    _sp_prev = spark.conf.get(_sp_key)
-    dp_parts = max(
-        1,
-        min(int(_sp_prev), -(-subs.count() // 50_000)),
-    )
-    best = None
-    spark.conf.set(_sp_key, str(dp_parts))
-    try:
-        best = _unigram_dp_rounds(
-            spark,
-            words,
-            subs,
-            counts,
-            n_rounds,
-            max_len,
-            step_cycler,
-            round_cycler,
-        )
-    finally:
-        spark.conf.set(_sp_key, _sp_prev)
-    return best.join(words.select("word", "wfreq"), "word").select(
+    # every substring (start, plen) of length 1..max_piece_len, so
+    # exactly min(max_piece_len, e) candidates end at position e
+    subs = words.select(
         "word",
-        F.col("wfreq").cast("long").alias("wfreq"),
-        "n_pieces",
-        "seg",
-        F.col("score").cast("long").alias("score"),
+        "wfreq",
+        F.inline(
+            F.expr(
+                f"flatten(transform(sequence(1, length(word)), i -> "
+                f"transform(sequence(1, least({max_piece_len}, "
+                f"length(word) - i + 1)), L -> "
+                f"struct(i as start, substring(word, i, L) as piece, "
+                f"L as plen))))"
+            )
+        ),
     )
-
-
-def _unigram_dp_rounds(
-    spark,
-    words: DataFrame,
-    subs: DataFrame,
-    counts: DataFrame,
-    n_rounds: int,
-    max_len: int,
-    step_cycler,
-    round_cycler,
-) -> DataFrame:
-    """The hard-EM Viterbi rounds of ``unigram_train``, factored so the
-    caller can scope the DP-sized shuffle-partition override around
-    exactly these vocab-bounded jobs."""
-    from pyspark.sql.window import Window
-
-    best = None
+    counts = subs.groupBy("piece").agg(
+        F.sum("wfreq").cast("long").alias("c")
+    )
+    # Candidates sorted by (end, plen): with K = max_piece_len, those
+    # ending at p start at 0-based slot sum_{j<p} min(K, j), i.e.
+    # m(m+1)/2 + (p-1-m)K with m = min(p-1, K). acc[q] is the best
+    # struct for the prefix of length q; acc[0] is the empty
+    # segmentation.
+    k = max_piece_len
+    m = f"least(p - 1, {k})"
+    first = f"{m} * ({m} + 1) div 2 + (p - 1 - {m}) * {k} + 1"
+    viterbi = F.expr(
+        f"""aggregate(
+            sequence(1, length(word)),
+            array(named_struct('n', 0L, 'neg', 0L, 'seg', '')),
+            (acc, p) -> concat(acc, array(array_min(transform(
+                slice(cands, {first}, least({k}, p)),
+                c -> named_struct(
+                    'n', acc[p - c.plen].n + 1,
+                    'neg', acc[p - c.plen].neg - c.pc,
+                    'seg', concat(
+                        acc[p - c.plen].seg,
+                        if(p = c.plen, '', '|'),
+                        substring(word, p - c.plen + 1, c.plen))))))),
+            acc -> acc[length(word)])"""
+    )
+    cands = F.array_sort(
+        F.collect_list(
+            F.struct(
+                (F.col("start") + F.col("plen") - 1).alias("e"),
+                "plen",
+                F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("pc"),
+            )
+        )
+    )
+    cycler = CheckpointCycler(docs.sparkSession)
     for _ in range(n_rounds):
-        scored_subs = subs.join(counts, "piece", "left").select(
-            "word",
-            "wlen",
-            "start",
-            "piece",
-            "plen",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("pc"),
-        )
-        states = words.select(
-            "word",
-            "wlen",
-            F.lit(0).alias("pos"),
-            F.lit("").alias("seg"),
-            F.lit(0).cast("long").alias("score"),
-        )
-        finished = None
-        for step in range(1, max_len + 1):
-            nxt = (
-                states.join(
-                    scored_subs.withColumnRenamed("wlen", "_wl"),
-                    (states.word == scored_subs.word)
-                    & (scored_subs.start == states.pos + 1),
-                )
-                .select(
-                    states.word,
-                    states.wlen,
-                    (states.pos + F.col("plen")).alias("pos"),
-                    F.concat(
-                        states.seg,
-                        F.when(states.pos == 0, F.lit("")).otherwise(
-                            F.lit("|")
-                        ),
-                        F.col("piece"),
-                    ).alias("seg"),
-                    (states.score + F.col("pc")).alias("score"),
-                )
-            )
-            fin = nxt.where(F.col("pos") == F.col("wlen")).select(
-                "word",
-                F.lit(step).cast("long").alias("n_pieces"),
-                "seg",
-                "score",
-            )
-            finished = (
-                fin
-                if finished is None
-                else finished.unionAll(
-                    # minimal piece count: words that already finished
-                    # at an earlier step never accept later finishes
-                    fin.join(
-                        finished.select("word").distinct(),
-                        "word",
-                        "left_anti",
-                    )
-                )
-            ).localCheckpoint(eager=True)
-            w_pos = Window.partitionBy("word", "pos").orderBy(
-                F.col("score").desc(), "seg"
-            )
-            states = (
-                nxt.where(F.col("pos") < F.col("wlen"))
-                .join(
-                    finished.select("word").distinct(),
-                    "word",
-                    "left_anti",
-                )
-                .withColumn("_rn", F.row_number().over(w_pos))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            ).localCheckpoint(eager=True)
-            step_cycler.cycle(states, finished)
-            if states.isEmpty():
-                break
-        w_word = Window.partitionBy("word").orderBy(
-            F.col("score").desc(), "seg"
-        )
+        # E-step: one row per word holding its scored candidates
         best = (
-            finished.withColumn("_rn", F.row_number().over(w_word))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        ).localCheckpoint(eager=True)
-        # M-step: piece counts from the chosen segmentations
-        counts = (
-            best.join(words.select("word", "wfreq"), "word")
+            subs.join(F.broadcast(counts), "piece", "left")
+            .groupBy("word", "wfreq")
+            .agg(cands.alias("cands"))
+            .select("word", "wfreq", viterbi.alias("b"))
             .select(
+                "word",
+                "wfreq",
+                F.col("b.n").alias("n_pieces"),
+                F.col("b.seg").alias("seg"),
+                (-F.col("b.neg")).alias("score"),
+            )
+        ).localCheckpoint(eager=True)
+        cycler.cycle(best, words)
+        # M-step: piece counts from the chosen segmentations, read by
+        # the next round's broadcast
+        counts = (
+            best.select(
                 F.explode(F.split("seg", "\\|")).alias("piece"), "wfreq"
             )
             .groupBy("piece")
             .agg(F.sum("wfreq").cast("long").alias("c"))
-        ).localCheckpoint(eager=True)
-        round_cycler.cycle(best, counts)
+        )
+    # the result reads only the last round's best: release words too
+    cycler.cycle(best)
     return best
 
 

@@ -102,8 +102,8 @@ def test_minhash_fused_collapse_exact_is_pair_identical(spark):
         (11, "one two"),                # ...duplicated (still shingles)
         (20, ""),                       # empty texts: one '' shingle
         (21, ""),
-        (30, None),                     # null group: no shingles,
-        (31, None),                     # must emit NO pairs
+        (30, None),                     # null texts shingle to {''}
+        (31, None),                     # too: they pair at 1.0
         (40, "q r s t u v w x y z a b"),
         (41, "q r s t u v w x y z a b"),
         (42, "q r s t u v w x y z a b"),
@@ -2717,6 +2717,119 @@ def test_unigram_train_empty_and_long_words(spark):
     assert rows["abcd"].n_pieces == 1
 
 
+def _unigram_dp_py(texts, n_rounds=2, max_piece_len=4):
+    # O(wlen x max_piece_len) reference for unigram_train on words too
+    # long to enumerate: best[p] is the minimal (n_pieces, -score, seg)
+    # for the prefix of length p, under the same objective and the
+    # same hard-EM recount as _unigram_train_py
+    from collections import Counter
+
+    wfreq = Counter(w for t in texts for w in t.split(" ") if w)
+    counts = Counter()
+    for w, f in wfreq.items():
+        for i in range(len(w)):
+            for L in range(1, min(max_piece_len, len(w) - i) + 1):
+                counts[w[i : i + L]] += f
+
+    best = {}
+    for _ in range(n_rounds):
+        best = {}
+        for w in wfreq:
+            dp = [(0, 0, "")]
+            for p in range(1, len(w) + 1):
+                cands = []
+                for L in range(1, min(max_piece_len, p) + 1):
+                    n, neg, seg = dp[p - L]
+                    piece = w[p - L : p]
+                    cands.append((
+                        n + 1,
+                        neg - counts.get(piece, 0),
+                        seg + ("|" if seg else "") + piece,
+                    ))
+                dp.append(min(cands))
+            best[w] = dp[-1]
+        counts = Counter()
+        for w, (_, _, seg) in best.items():
+            for piece in seg.split("|"):
+                counts[piece] += wfreq[w]
+    return {w: (wfreq[w], n, seg, -neg) for w, (n, neg, seg) in best.items()}
+
+
+def test_unigram_dp_reference_matches_brute_force():
+    # the DP reference is itself pinned to the brute-force enumerator
+    # on words short enough to enumerate
+    import random
+
+    for seed in (3, 17):
+        rng = random.Random(seed)
+        vocab = [
+            "".join(rng.choice("ab") for _ in range(rng.randint(1, 12)))
+            for _ in range(10)
+        ]
+        texts = [
+            " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 6)))
+            for _ in range(15)
+        ]
+        assert _unigram_dp_py(texts, 2, 3) == _unigram_train_py(texts, 2, 3)
+
+
+def test_unigram_train_long_words_match_dp_reference(spark):
+    # words of 20-300 characters over 2-3 letter alphabets: many
+    # equal-count ties, so the (n_pieces, -score, seg) tie-break and
+    # the per-prefix pruning are both exercised far past the lengths
+    # the brute-force reference can enumerate
+    import random
+
+    from map_reduce_project_spark.operators.text import unigram_train
+
+    for seed, alphabet in ((5, "ab"), (41, "abc")):
+        rng = random.Random(seed)
+        vocab = [
+            "".join(rng.choice(alphabet) for _ in range(n))
+            for n in [300] + [rng.randint(20, 120) for _ in range(7)]
+        ]
+        texts = [
+            " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 4)))
+            for _ in range(12)
+        ] + [vocab[0]]
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        got = {
+            r.word: (r.wfreq, r.n_pieces, r.seg, r.score)
+            for r in unigram_train(df, n_rounds=2, max_piece_len=4).collect()
+        }
+        want = _unigram_dp_py(texts, n_rounds=2, max_piece_len=4)
+        assert got == want, (seed, alphabet)
+
+
+def test_unigram_train_job_count_and_session_conf(spark):
+    # the E-step runs in-row, so a 60-character word costs the same
+    # jobs as a 5-character one, and training leaves the session's
+    # shuffle and AQE settings as it found them
+    import uuid
+
+    from map_reduce_project_spark.operators.text import unigram_train
+
+    sc = spark.sparkContext
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    jobs = {}
+    for longest in (5, 60):
+        word = "ab" * (longest // 2) + "c" * (longest % 2)
+        texts = ["ab ba abc", "ab " + word]
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        group = f"unigram-jobs-{longest}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "unigram_train job count")
+        try:
+            rows = unigram_train(df, n_rounds=2, max_piece_len=4).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert max(len(r.word) for r in rows) == longest
+        jobs[longest] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[5] == jobs[60] > 0, jobs
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
 def test_png_adam7_and_16bit_decode():
     # round 8: PNG closure tiers. Round trips exercise every pass
     # shape; the HAND-BUILT streams (filter-0 rows laid out straight
@@ -2981,6 +3094,9 @@ def test_unigram_train_rejects_nonpositive_rounds(spark):
     for bad in (0, -1):
         with _pytest.raises(ValueError, match="n_rounds"):
             unigram_train(df, n_rounds=bad)
+        # the per-position candidate slots assume pieces of >= 1 char
+        with _pytest.raises(ValueError, match="max_piece_len"):
+            unigram_train(df, max_piece_len=bad)
 
 
 def test_gopher_line_rules_each_rule_fails_on_planted_doc(spark):
