@@ -14,7 +14,6 @@ from map_reduce_project_spark.graph.generators import (
     generate_random_graph,
 )
 from map_reduce_project_spark.graph.star import (
-    connected_components_star,
     large_star,
     small_star,
 )
@@ -28,7 +27,6 @@ __all__ = [
     "component_count",
     "component_summary",
     "connected_components",
-    "connected_components_star",
     "large_star",
     "small_star",
     "generate_chain_graph",

@@ -21,11 +21,14 @@ windows, no cross joins.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .ccf import _undirected
+from .checkpointing import fixed_point
 
 # How many Bellman-Ford relaxations the sssp loops chain LAZILY between
 # materialization barriers (eager localCheckpoint + convergence count).
@@ -35,6 +38,12 @@ from .ccf import _undirected
 # Scale-neutral: the knob trades lineage depth between checkpoints
 # against per-round scheduling + state-write cost, not data volume.
 _RELAX_PER_BARRIER = 2
+
+
+def _changed_rows(flag: str):
+    """``fixed_point`` measure: the rows whose ``flag`` is true (the
+    loop has converged when there are none)."""
+    return lambda df: {"changed": df.where(F.col(flag)).count()}
 
 
 def canonical_pairs(edges: DataFrame) -> DataFrame:
@@ -167,6 +176,28 @@ def _bfs_hops_on(
     return visited
 
 
+def _adjacency_degrees(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The integer PageRanks' loop invariants, each checkpointed once:
+    the undirected simple adjacency and its (node, deg) table."""
+    und = canonical_undirected(edges).localCheckpoint(eager=True)
+    deg = (
+        und.groupBy("src")
+        .agg(F.count("*").alias("deg"))
+        .withColumnRenamed("src", "node")
+    ).localCheckpoint(eager=True)
+    return und, deg
+
+
+def _rank_shares(cur: DataFrame, und: DataFrame, deg: DataFrame) -> DataFrame:
+    """(node, c): every neighbor's integer share ``rank div deg``."""
+    return (
+        cur.join(deg, "node")
+        .select(F.col("node").alias("src"), F.expr("rank div deg").alias("c"))
+        .join(und, "src")
+        .select(F.col("dst").alias("node"), "c")
+    )
+
+
 def pagerank_int(
     edges: DataFrame, iterations: int = 5, scale: int = 10**12
 ) -> DataFrame:
@@ -199,52 +230,24 @@ def pagerank_int(
     loop pays a full state write+read. Interleaved A/B at sf0.1
     (part-supplier graph, noop sink): 26.5 s -> 9.9 s.
     """
-    und = canonical_undirected(edges).localCheckpoint(eager=True)
-    deg = (
-        und.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .withColumnRenamed("src", "node")
-    ).localCheckpoint(eager=True)
+    und, deg = _adjacency_degrees(edges)
     n = deg.count()
     init = scale // n
     teleport = (15 * init) // 100
     ranks = deg.select("node", F.lit(init).alias("rank"))
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     def _step(cur: DataFrame) -> DataFrame:
-        contribs = (
-            cur.join(deg, "node")
-            .select(
-                F.col("node").alias("src"),
-                F.expr("rank div deg").alias("c"),
-            )
-            .join(und, "src")
-            .select(F.col("dst").alias("node"), "c")
-        )
-        return contribs.groupBy("node").agg(
-            (F.lit(teleport) + F.expr("(85 * sum(c)) div 100")).alias(
-                "rank"
-            )
+        return _rank_shares(cur, und, deg).groupBy("node").agg(
+            (F.lit(teleport) + F.expr("(85 * sum(c)) div 100")).alias("rank")
         )
 
-    # deg is loop-invariant and must survive every round: the cycler
-    # only ever frees ids claimed through cycle(df), so it is safe
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(b, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        # the previous barrier's ranks are dead once this one is
-        # materialized; the final barrier is never released
-        cycler.cycle(ranks)
-    return ranks
+    return fixed_point(
+        ranks,
+        _step,
+        max_steps=iterations,
+        per_barrier=_RELAX_PER_BARRIER,
+        invariants=(und, deg),
+    ).state
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -277,10 +280,6 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     # round 12: the adjacency feeds the init distinct plus every
     # round's join — checkpoint it once instead of re-deriving the
     # scan->canonicalize->expand subtree per consumer
@@ -308,19 +307,13 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     # round 12: two rounds per barrier (same batching as pagerank_int
     # — the synchronous update is a pure function of the previous
     # labels, so barrier frequency cannot change the result)
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < rounds:
-        take = min(b, rounds - done)
-        for _ in range(take):
-            labels = _round(labels)
-        labels = labels.localCheckpoint(eager=True)
-        done += take
-        # previous barrier's labels are dead once this one is
-        # materialized; the final barrier is never released
-        cycler.cycle(labels)
-    return labels
+    return fixed_point(
+        labels,
+        _round,
+        max_steps=rounds,
+        per_barrier=_RELAX_PER_BARRIER,
+        invariants=(und,),
+    ).state
 
 
 def _wedge_shuffle_partitions(oriented: DataFrame) -> int:
@@ -492,10 +485,6 @@ def bounded_sssp(
     and each round's cost is one edge-list join regardless of round
     number.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     e = edges.select(
         F.col(edges.columns[0]).alias("src"),
         F.col(edges.columns[1]).alias("dst"),
@@ -506,23 +495,21 @@ def bounded_sssp(
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    cycler = CheckpointCycler(edges.sparkSession)
-    for _ in range(rounds):
-        cand = dist.join(
+
+    def _relax(cur: DataFrame) -> DataFrame:
+        cand = cur.join(
             e.withColumnRenamed("src", "node"), "node"
         ).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
-            dist.unionAll(cand)
+        return (
+            cur.unionAll(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-        ).localCheckpoint(eager=True)
-        # previous round's distances are dead once this round's are
-        # materialized (eager checkpoint); final round backs the result
-        cycler.cycle(dist)
-    return dist
+        )
+
+    return fixed_point(dist, _relax, max_steps=rounds).state
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:
@@ -601,12 +588,7 @@ def personalized_pagerank_int(
     (see its docstring; the update is a pure deterministic function of
     the previous ranks, so only barrier frequency changes).
     """
-    und = canonical_undirected(edges).localCheckpoint(eager=True)
-    deg = (
-        und.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .withColumnRenamed("src", "node")
-    ).localCheckpoint(eager=True)
+    und, deg = _adjacency_degrees(edges)
     seed_nodes = seeds.select(
         F.col(seeds.columns[0]).alias("node")
     ).dropDuplicates().localCheckpoint(eager=True)
@@ -622,21 +604,8 @@ def personalized_pagerank_int(
         "node", F.when(is_seed, F.lit(init)).otherwise(F.lit(0)).alias("rank")
     )
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     def _step(cur: DataFrame) -> DataFrame:
-        contribs = (
-            cur.join(deg, "node")
-            .select(
-                F.col("node").alias("src"),
-                F.expr("rank div deg").alias("c"),
-            )
-            .join(und, "src")
-            .select(F.col("dst").alias("node"), "c")
-        )
-        gathered = contribs.groupBy("node").agg(
+        gathered = _rank_shares(cur, und, deg).groupBy("node").agg(
             F.expr("(85 * sum(c)) div 100").alias("_g")
         )
         return gathered.join(
@@ -651,17 +620,13 @@ def personalized_pagerank_int(
             ).alias("rank"),
         )
 
-    cycler = CheckpointCycler(edges.sparkSession)
-    b = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(b, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        cycler.cycle(ranks)
-    return ranks
+    return fixed_point(
+        ranks,
+        _step,
+        max_steps=iterations,
+        per_barrier=_RELAX_PER_BARRIER,
+        invariants=(und, deg, seed_nodes),
+    ).state
 
 
 def per_seed_bfs(
@@ -764,10 +729,6 @@ def sssp_int(
     if k < 3 or k > 62:
         return _sssp_rows(weighted_edges, seeds, max_rounds)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     und = _weighted_undirected(weighted_edges).localCheckpoint(eager=True)
     seed_idx = _seed_bit_index(seed_rows)
     inf = 1 << 62
@@ -778,13 +739,13 @@ def sssp_int(
             f"i -> CAST(IF(i = idx, 0, {inf}) AS BIGINT))"
         ).alias("d"),
     ).localCheckpoint(eager=True)
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    converged = False
     fill = F.expr(f"array_repeat(CAST({inf} AS BIGINT), {k})")
 
     def _relax(cur: DataFrame) -> DataFrame:
-        """One lazy relaxation: (node, od, nd) where od is ``cur``'s
-        distance array and nd the improved one. ``cur`` appears twice
+        """One lazy relaxation: (node, d, chg) where d is the improved
+        distance array and chg flags a node whose array improved on
+        ``cur``'s (the next relaxation reads only (node, d), so a
+        chained flag is pruned from the plan). ``cur`` appears twice
         (adjacency join + full-outer merge); its exchange is planned
         once and reused (ReuseExchange), so chaining relaxations
         between barriers does not re-shuffle the state per reference."""
@@ -821,6 +782,12 @@ def sssp_int(
                     f"IF(least(x, y) >= {inf}, {inf}, least(x, y)))"
                 ).alias("nd"),
             )
+            .select(
+                "node",
+                F.col("nd").alias("d"),
+                F.expr("exists(zip_with(od, nd, (x, y) -> y < x), b -> b)")
+                .alias("chg"),
+            )
         )
 
     # Relaxation batching (optimization round 12, guide §1.2 step 1 /
@@ -833,32 +800,12 @@ def sssp_int(
     # convergence test reads the LAST chained relaxation's change
     # flag: zero changes there means the previous relaxation already
     # sat at the fixed point. Budget parity: ceil(max_rounds / b)
-    # batches observe >= max_rounds relaxations, so any instance the
-    # unbatched loop could converge within budget still converges
+    # full batches observe >= max_rounds relaxations, so any instance
+    # the unbatched loop could converge within budget still converges
     # (extra relaxations past the fixed point are no-ops).
-    b = _RELAX_PER_BARRIER
-    for _r in range((max_rounds + b - 1) // b):
-        merged = _relax(dist)
-        for _j in range(b - 1):
-            merged = _relax(merged.select("node", F.col("nd").alias("d")))
-        nxt = merged.select(
-            "node",
-            F.col("nd").alias("d"),
-            F.expr("exists(zip_with(od, nd, (x, y) -> y < x), b -> b)")
-            .alias("chg"),
-        ).localCheckpoint(eager=True)
-        n_changed = nxt.where(F.col("chg")).count()
-        dist = nxt.select("node", "d")
-        cycler.cycle(nxt)
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"sssp_int did not converge within max_rounds={max_rounds}; "
-            "raise max_rounds (bound is the longest shortest path's "
-            "edge count)"
-        )
+    dist = _sssp_fixed_point(
+        dist, _relax, max_rounds, ("node", "d"), invariants=(und,)
+    )
     out = (
         dist.select("node", F.posexplode("d").alias("idx", "dist"))
         .where(F.col("dist") < inf)
@@ -898,10 +845,6 @@ def _sssp_rows(
 ) -> DataFrame:
     """(seed, node)-keyed Bellman-Ford — the general-k path (and the
     property-pin oracle for the array batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     und = _weighted_undirected(weighted_edges).localCheckpoint(eager=True)
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
@@ -912,8 +855,6 @@ def _sssp_rows(
             F.lit(0).cast("long").alias("dist"),
         )
     ).localCheckpoint(eager=True)
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    converged = False
 
     def _relax(cur: DataFrame) -> DataFrame:
         cand = (
@@ -948,25 +889,41 @@ def _sssp_rows(
 
     # chained-relaxation barriers — same batching (and same result
     # identity / budget-parity argument) as the array path above
+    return _sssp_fixed_point(
+        dist, _relax, max_rounds, ("seed", "node", "dist"), invariants=(und,)
+    )
+
+
+def _sssp_fixed_point(
+    dist: DataFrame,
+    relax: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    cols: tuple[str, ...],
+    invariants: tuple[DataFrame, ...],
+) -> DataFrame:
+    """Both sssp loops: ceil(max_rounds / b) barriers of b chained
+    relaxations each, every barrier an eager checkpoint plus a count of
+    the rows flagged ``chg``; the initial ``dist`` checkpoint is freed
+    after the first barrier. Raises when the budget runs out."""
     b = _RELAX_PER_BARRIER
-    for _r in range((max_rounds + b - 1) // b):
-        merged = _relax(dist)
-        for _j in range(b - 1):
-            merged = _relax(merged.select("seed", "node", "dist"))
-        nxt = merged.localCheckpoint(eager=True)
-        n_changed = nxt.where(F.col("chg")).count()
-        dist = nxt.select("seed", "node", "dist")
-        cycler.cycle(nxt)
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
+    res = fixed_point(
+        dist,
+        relax,
+        max_steps=-(-max_rounds // b) * b,
+        per_barrier=b,
+        carry=lambda df: df.select(*cols),
+        measure=_changed_rows("chg"),
+        eager=True,
+        own_state=True,
+        invariants=invariants,
+    )
+    if not res.converged:
         raise ValueError(
             f"sssp_int did not converge within max_rounds={max_rounds}; "
             "raise max_rounds (bound is the longest shortest path's "
             "edge count)"
         )
-    return dist
+    return res.state
 
 
 def _seed_bit_index(seed_rows: DataFrame) -> DataFrame:
@@ -1539,10 +1496,6 @@ def pagerank_weighted_int(
     teleport = (15 * init) // 100
     ranks = wdeg.select("node", F.lit(init).alias("rank"))
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     def _step(cur: DataFrame) -> DataFrame:
         contribs = (
             cur.join(wdeg, "node")
@@ -1559,17 +1512,13 @@ def pagerank_weighted_int(
             )
         )
 
-    cycler = CheckpointCycler(weighted_edges.sparkSession)
-    bb = _RELAX_PER_BARRIER
-    done = 0
-    while done < iterations:
-        take = min(bb, iterations - done)
-        for _ in range(take):
-            ranks = _step(ranks)
-        ranks = ranks.localCheckpoint(eager=True)
-        done += take
-        cycler.cycle(ranks)
-    return ranks
+    return fixed_point(
+        ranks,
+        _step,
+        max_steps=iterations,
+        per_barrier=_RELAX_PER_BARRIER,
+        invariants=(und, wdeg),
+    ).state
 
 
 def _directed_simple_edges(edges: DataFrame) -> DataFrame:
@@ -1598,15 +1547,9 @@ def _min_reach_labels(
     released through the ownership cycler. The returned labels ride
     the final checkpoint — the caller owns (and should release) it.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    cycler = CheckpointCycler(edges.sparkSession)
     labels = nodes.select(
         "node", F.col("node").alias("lbl")
     ).localCheckpoint(eager=True)
-    cycler.cycle(labels)
 
     def _round(cur: DataFrame) -> DataFrame:
         incoming = (
@@ -1626,22 +1569,18 @@ def _min_reach_labels(
     # round 12: _RELAX_PER_BARRIER rounds chained lazily per barrier +
     # count — the sssp batching argument verbatim (monotone min update,
     # idempotent at the fixed point; a zero-change LAST round proves
-    # the previous one already converged, and ceil(max_iters/b)
-    # batches observe >= max_iters rounds)
-    b = _RELAX_PER_BARRIER
-    it = 0
-    while it < max_iters:
-        take = min(b, max_iters - it)
-        merged = _round(labels)
-        for _ in range(take - 1):
-            merged = _round(merged.select("node", "lbl"))
-        nxt = merged.localCheckpoint(eager=False)
-        n_changed = nxt.where(F.col("_chg")).count()
-        cycler.cycle(nxt)
-        labels = nxt.select("node", "lbl")
-        it += take
-        if n_changed == 0:
-            return labels
+    # the previous one already converged)
+    res = fixed_point(
+        labels,
+        _round,
+        max_steps=max_iters,
+        per_barrier=_RELAX_PER_BARRIER,
+        carry=lambda df: df.select("node", "lbl"),
+        measure=_changed_rows("_chg"),
+        own_state=True,
+    )
+    if res.converged:
+        return res.state
     raise ValueError(
         f"min-label propagation did not converge within {max_iters} "
         "iterations — raise max_iters (rounds track the directed "
@@ -1927,46 +1866,41 @@ def dag_longest_path_levels(
     loops: one lazy checkpoint, one counting action, ownership-cycled
     generations.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     e = _directed_simple_edges(edges)
     node_set = e.select(F.col("src").alias("node")).unionAll(
         e.select(F.col("dst").alias("node"))
     )
     if nodes is not None:
         node_set = node_set.unionAll(nodes.select("node"))
-    cycler = CheckpointCycler(edges.sparkSession)
     levels = (
         node_set.distinct()
         .select("node", F.lit(0).cast("long").alias("level"))
         .localCheckpoint(eager=True)
     )
-    cycler.cycle(levels)
-    for _ in range(max_iters):
+
+    def _round(cur: DataFrame) -> DataFrame:
         incoming = (
-            e.join(
-                levels.select(F.col("node").alias("src"), "level"), "src"
-            )
+            e.join(cur.select(F.col("node").alias("src"), "level"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("level") + 1).alias("in_lvl"))
         )
-        nxt = (
-            levels.join(incoming, "node", "left")
-            .select(
-                "node",
-                # greatest() skips NULL (no in-edges -> keep level)
-                F.greatest("level", "in_lvl").alias("level"),
-                (F.col("in_lvl") > F.col("level")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
+        return cur.join(incoming, "node", "left").select(
+            "node",
+            # greatest() skips NULL (no in-edges -> keep level)
+            F.greatest("level", "in_lvl").alias("level"),
+            (F.col("in_lvl") > F.col("level")).alias("_chg"),
         )
-        n_changed = nxt.where(F.col("_chg")).count()
-        cycler.cycle(nxt)
-        levels = nxt.select("node", "level")
-        if n_changed == 0:
-            return levels
+
+    res = fixed_point(
+        levels,
+        _round,
+        max_steps=max_iters,
+        carry=lambda df: df.select("node", "level"),
+        measure=_changed_rows("_chg"),
+        own_state=True,
+    )
+    if res.converged:
+        return res.state
     raise ValueError(
         f"longest-path layering did not converge within {max_iters} "
         "rounds — the input has a cycle (not a DAG), or its depth "

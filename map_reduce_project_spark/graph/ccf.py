@@ -39,13 +39,13 @@ Semantic fine print preserved (SURVEY.md §2.4):
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass
+from operator import eq
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MAX_ITERATIONS = 100
 
@@ -335,6 +335,38 @@ def ccf_dedup(pairs: DataFrame) -> DataFrame:
     return pairs.dropDuplicates(["src", "dst"]).select("src", "dst")
 
 
+def _has_hub(
+    pairs: DataFrame, n_edges: int, skew_degree_threshold: int
+) -> bool:
+    """Hub-skew autodetect for ``connected_components``.
+
+    Only probes degrees when a degree could plausibly cross the
+    threshold: each input pair row contributes exactly one undirected
+    row to each of its two endpoints, so no key can exceed n_edges
+    rows — below the threshold the probe job is provably wasted. Above
+    _PROBE_EXACT_ROWS the probe samples the edge list so its cost stays
+    bounded no matter the graph size.
+    """
+    if n_edges < skew_degree_threshold:
+        return False
+    undirected = _undirected(pairs)
+    fraction = _probe_fraction(n_edges, skew_degree_threshold)
+    if fraction < 1.0:
+        undirected = undirected.sample(
+            withReplacement=False, fraction=fraction, seed=42
+        )
+    max_seen = (
+        undirected.groupBy("src").count().agg(F.max("count")).collect()[0][0]
+        or 0
+    )
+    # scale the sampled max back up; 2x safety factor (sampling noise
+    # only matters for hubs near the threshold, where either path is
+    # acceptable)
+    if fraction < 1.0:
+        return max_seen / fraction >= skew_degree_threshold / 2
+    return max_seen >= skew_degree_threshold
+
+
 def connected_components(
     edges: DataFrame,
     use_secondary_sort: bool = False,
@@ -367,10 +399,13 @@ def connected_components(
     ``"star"``; ``reliable_checkpoint_dir`` / ``n_edges_hint`` /
     ``on_iteration`` carry over with the same contracts.
 
-    Per iteration: Iterate -> eager localCheckpoint (single job; pins the
-    result and truncates lineage) -> cheap count on the checkpointed
-    new-pair branch -> lazy dedup feeding the next pass. Stops when the
-    new-pair count is 0 (the converging iteration is counted, S4).
+    Per iteration (graph/checkpointing.py ``fixed_point``): Iterate ->
+    lazy localCheckpoint whose new-pair count is the single
+    materializing job (pins the result and truncates lineage) -> lazy
+    dedup feeding the next pass. Stops when the new-pair count is 0
+    (the converging iteration is counted, S4). Star rounds run through
+    the same ``fixed_point`` loop, converging when the round's edge-set
+    fingerprint repeats.
 
     ``skew_robust``: None (default) = autodetect — when the graph is
     large enough that a single node's adjacency could overwhelm one
@@ -382,7 +417,9 @@ def connected_components(
     run ``ccf_fixed_point_local`` on the driver instead of the
     distributed loop (identical semantics; see its docstring for why).
     Callers with reference-harness-scale graphs (bench, experiment
-    sweep) opt in; the default stays distributed. CALLER CONTRACT:
+    sweep) opt in; the default stays distributed. The local path
+    raises ``ValueError`` when either id column is not a string (S1;
+    read from the schema, no job). CALLER CONTRACT:
     the sizing count and the local path's collect are two executions
     of the input plan — if ``edges`` is the tail of an expensive
     chain (e.g. a MinHash->LSH->Jaccard candidate pipeline),
@@ -399,38 +436,28 @@ def connected_components(
 
     ``on_iteration``: optional observability hook, called once per
     iteration right after that iteration's materializing count with a
-    dict ``{"iteration", "wall_sec", "new_pairs"}`` plus, in reliable
-    mode, ``"checkpoint_dir"`` and (when the directory is a visible
-    local path) ``"ckpt_mb"`` — the measured on-disk size of the
-    generation just written. Diagnostics only (bench per-iteration
+    dict ``{"iteration", "wall_sec", "new_pairs"}`` (star: ``"pairs"``,
+    the canonical edge-set size, and its ``"fingerprint"``) plus, in
+    reliable mode, ``"checkpoint_dir"`` and (when the directory is a
+    visible local path) ``"ckpt_mb"`` — the measured on-disk size of
+    the generation just written. Diagnostics only (bench per-iteration
     instrumentation, regression forensics); exceptions propagate, so
     hooks should not throw.
 
     ``reliable_checkpoint_dir``: when set, each iteration materializes
-    as a RELIABLE barrier — a parquet write + readback under this
-    directory (HDFS/object storage on a cluster) instead of
-    ``localCheckpoint``. localCheckpoint pins blocks on executors;
-    losing ANY executor mid-loop kills the job because truncated
-    lineage cannot recompute. On a multi-hour 100 TB run that trade is
-    wrong — the on-disk generation survives executor loss. Parquet
-    write+readback rather than ``df.checkpoint()`` deliberately: RDD
-    reliable checkpointing runs a SECOND job to write its files (the
-    unpersisted-checkpoint double execution) and stores
-    java-serialized rows; the write-out runs each iteration once and
-    stores columnar-compressed generations (measured 853 s -> 424 s
-    for the 20M-edge fixed point, generations ~40% smaller). The loop points each iteration at its own
-    ``<dir>/iter-NNNN`` subdirectory and DELETES iteration i's files
-    (Hadoop FS recursive delete — works for HDFS/S3A paths too) the
-    moment iteration i+1 materializes, so on-disk size is one
-    generation of pairs, not one per iteration; the FINAL generation's
-    files back the returned mapping and are the caller's to remove
-    (the caller owns the directory — deleting it while the session
-    lives invalidates the returned mapping's backing files, so
-    collect the mapping first). The session checkpoint directory is
-    never read or written: the parquet barrier is path-addressed, so
-    ``df.checkpoint()`` elsewhere in the session is unaffected. The
-    single-driver-loop-at-a-time assumption documented for the
-    shuffle-partition override still applies.
+    as a RELIABLE barrier — a parquet write + readback under
+    ``<dir>/iter-NNNN`` (HDFS/object storage on a cluster) instead of
+    ``localCheckpoint``, so a multi-hour run survives executor loss;
+    graph/checkpointing.py explains why parquet and not
+    ``df.checkpoint()``. Iteration i's files are DELETED (Hadoop FS
+    recursive delete — works for HDFS/S3A paths too) the moment
+    iteration i+1 materializes, so on-disk size is one generation of
+    pairs, not one per iteration; the FINAL generation's files back
+    the returned mapping and are the caller's to remove (the caller
+    owns the directory — deleting it while the session lives
+    invalidates the returned mapping's backing files, so collect the
+    mapping first). The single-driver-loop-at-a-time assumption
+    documented for the shuffle-partition override still applies.
 
     Returns the (node, component) mapping where component is the
     lexicographically smallest node ID in the node's component; the
@@ -440,27 +467,16 @@ def connected_components(
         raise ValueError(
             f"algorithm must be 'ccf' or 'star', got {algorithm!r}"
         )
-    if algorithm == "star":
-        if use_secondary_sort or conformance:
-            raise ValueError(
-                "SecondarySort/conformance emission semantics are "
-                "CCF-specific; algorithm='star' does not support them"
-            )
-        if skew_robust is not None or local_threshold is not None:
-            raise ValueError(
-                "skew_robust/local_threshold are CCF-loop knobs; "
-                "algorithm='star' does not support them"
-            )
-        from map_reduce_project_spark.graph.star import (
-            connected_components_star,
-        )
-
-        return connected_components_star(
-            edges,
-            max_rounds=max_iterations,
-            reliable_checkpoint_dir=reliable_checkpoint_dir,
-            n_edges_hint=n_edges_hint,
-            on_iteration=on_iteration,
+    star = algorithm == "star"
+    if star and (
+        use_secondary_sort
+        or conformance
+        or skew_robust is not None
+        or local_threshold is not None
+    ):
+        raise ValueError(
+            "use_secondary_sort/conformance/skew_robust/local_threshold "
+            "are CCF-specific; algorithm='star' does not support them"
         )
 
     pairs = edges.select(
@@ -477,6 +493,17 @@ def connected_components(
     n_edges = n_edges_hint if n_edges_hint is not None else pairs.count()
 
     if local_threshold is not None and n_edges <= local_threshold:
+        bad = [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in pairs.schema.fields
+            if not isinstance(f.dataType, T.StringType)
+        ]
+        if bad:
+            raise ValueError(
+                "the driver-local CC path needs string node ids (S1: "
+                "ids are strings, min is lexicographic); got "
+                + ", ".join(bad)
+            )
         import pyarrow as pa
 
         # Arrow at both driver boundaries (optimization round 13,
@@ -488,18 +515,12 @@ def connected_components(
         # 0.9 s -> 0.8 s).
         tbl = pairs.toArrow()
         final, iterations, converged, counts = ccf_fixed_point_local(
-            list(
-                zip(
-                    tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
-                )
-            ),
+            list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())),
             max_iterations,
         )
         out = pa.table(
             {
-                "node": pa.array(
-                    [p[0] for p in final], type=pa.string()
-                ),
+                "node": pa.array([p[0] for p in final], type=pa.string()),
                 "component": pa.array(
                     [p[1] for p in final], type=pa.string()
                 ),
@@ -514,53 +535,47 @@ def connected_components(
             iterate_path="local",
         )
 
-    if use_secondary_sort:
-        iterate_fn = (
-            ccf_iterate_secondary_sort_conformance
-            if conformance
-            else ccf_iterate_secondary_sort
+    if star:
+        from map_reduce_project_spark.graph.star import (
+            star_fingerprint,
+            star_round,
         )
-        path = "secondary_sort"
+
+        # converged when a round's fingerprint repeats the previous one
+        step, carry, measure, until = star_round, None, star_fingerprint, eq
+        path = "star"
     else:
-        if skew_robust is None:
-            # only probe degrees when a degree could plausibly cross
-            # the threshold: each input pair row contributes exactly
-            # one undirected row to each of its two endpoints, so no
-            # key can exceed n_edges rows — below the threshold the
-            # probe job is provably wasted. Above _PROBE_EXACT_ROWS
-            # the probe samples the edge list so its cost stays
-            # bounded no matter the graph size
-            skew_robust = False
-            if n_edges >= skew_degree_threshold:
-                undirected = _undirected(pairs)
-                fraction = _probe_fraction(n_edges, skew_degree_threshold)
-                if fraction < 1.0:
-                    undirected = undirected.sample(
-                        withReplacement=False, fraction=fraction, seed=42
-                    )
-                max_seen = (
-                    undirected.groupBy("src")
-                    .count()
-                    .agg(F.max("count"))
-                    .collect()[0][0]
-                    or 0
-                )
-                # scale the sampled max back up; 2x safety factor
-                # (sampling noise only matters for hubs near the
-                # threshold, where either path is acceptable)
-                skew_robust = (
-                    max_seen / fraction >= skew_degree_threshold / 2
-                    if fraction < 1.0
-                    else max_seen >= skew_degree_threshold
-                )
-        if skew_robust:
-            # groupBy+join formulation: AQE can skew-split the join when
-            # a hub node's adjacency would overwhelm one window partition
-            iterate_fn = ccf_iterate_join
-            path = "join"
+        until = None
+        # NB: deduping physically between rounds is a MEASURED win
+        # over fusing the dedup into the next window pass
+        # (adjacent-duplicate lag filter, one shuffle/round):
+        # converging CC emits the same (node, min) pair from many
+        # groups, so the carried duplicate volume costs more than the
+        # saved exchange (500k probe: 10.9s -> 15.4s fused)
+        carry = ccf_dedup
+
+        def measure(combined: DataFrame) -> dict:
+            return {"new_pairs": combined.where(F.col(_NEW)).count()}
+
+        if use_secondary_sort:
+            step = (
+                ccf_iterate_secondary_sort_conformance
+                if conformance
+                else ccf_iterate_secondary_sort
+            )
+            path = "secondary_sort"
         else:
-            iterate_fn = ccf_iterate
-            path = "window"
+            if skew_robust is None:
+                skew_robust = _has_hub(
+                    pairs, n_edges, skew_degree_threshold
+                )
+            if skew_robust:
+                # groupBy+join formulation: AQE can skew-split the
+                # join when a hub node's adjacency would overwhelm one
+                # window partition
+                step, path = ccf_iterate_join, "join"
+            else:
+                step, path = ccf_iterate, "window"
 
     # Size the loop's shuffles from the data, not from session
     # defaults (see _loop_shuffle_partitions: sqrt-of-volume optimum
@@ -578,119 +593,41 @@ def connected_components(
     if pairs.rdd.getNumPartitions() > target:
         pairs = pairs.coalesce(target)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        hadoop_delete as _hadoop_delete,
-    )
+    from map_reduce_project_spark.graph.checkpointing import fixed_point
 
-    iterations = 0
-    converged = False
-    counts: list[int] = []
-    cycler = CheckpointCycler(spark)
-    prev_reliable_dir: str | None = None
-
+    # one lazy-checkpoint barrier per iteration whose measure is the
+    # materializing action: ONE job per iteration (the reference runs
+    # two, and its Python variant re-executes the reduce phase in the
+    # second — SURVEY.md §3.1); reliable mode trades that for
+    # executor-loss tolerance (see the docstring and
+    # graph/checkpointing.py)
     try:
-        while iterations < max_iterations:
-            iterations += 1
-            it_t0 = time.perf_counter()
-
-            # lazy checkpoint + count: the count is the materializing
-            # action, so each iteration is ONE job (the reference runs
-            # two, and its Python variant re-executes the reduce phase
-            # in the second — SURVEY.md §3.1). Reliable mode trades
-            # that for executor-loss tolerance (see docstring).
-            stepped = iterate_fn(pairs)
-            if reliable_checkpoint_dir is not None:
-                # one subdirectory per iteration so superseded
-                # generations can be deleted by path. The barrier is a
-                # PARQUET WRITE + READBACK, not df.checkpoint(): RDD
-                # reliable checkpointing runs a SECOND job to write the
-                # files (ReliableCheckpointRDD recomputes the
-                # reduce-side sort+window after the count job — the
-                # classic unpersisted-checkpoint double execution) and
-                # stores java-serialized rows. The write-out executes
-                # the iteration exactly once and stores columnar
-                # snappy parquet (~4x smaller generations); measured
-                # 159 s -> 97 s for the 5M-edge reliable fixed point
-                # (round-10 verdict item 2). Recovery semantics are
-                # identical: the files survive executor loss and the
-                # readback truncates lineage. Schema passed explicitly
-                # so a converged 0-row generation still reads.
-                it_dir = f"{reliable_checkpoint_dir}/iter-{iterations:04d}"
-                stepped.write.mode("overwrite").parquet(it_dir)
-                combined = spark.read.schema(stepped.schema).parquet(
-                    it_dir
-                )
-            else:
-                combined = stepped.localCheckpoint(eager=False)
-            new_pair_count = combined.where(F.col(_NEW)).count()
-            counts.append(new_pair_count)
-
-            # iteration i's checkpoint blocks are garbage the moment
-            # iteration i+1 materializes (the count above): release
-            # them now instead of waiting for driver GC (see
-            # graph/checkpointing.py — pinned storage stays ~2
-            # iterations wide instead of growing with depth). Reliable
-            # mode has no pinned blocks — its generations are parquet
-            # directories, freed by the _hadoop_delete below.
-            if reliable_checkpoint_dir is None:
-                cycler.cycle(combined)
-            if on_iteration is not None:
-                info = {
-                    "iteration": iterations,
-                    "wall_sec": round(time.perf_counter() - it_t0, 3),
-                    "new_pairs": new_pair_count,
-                }
-                if reliable_checkpoint_dir is not None:
-                    info["checkpoint_dir"] = it_dir
-                    # Hadoop may render the URI as file:///p, file://p
-                    # or file:/p — parse rather than slice a fixed
-                    # prefix (a 7-char slice mangles file:/p and the
-                    # ckpt_mb diagnostic silently vanishes)
-                    if it_dir.startswith("file:"):
-                        from urllib.parse import urlparse
-
-                        local_dir = urlparse(it_dir).path
-                    else:
-                        local_dir = it_dir
-                    if os.path.isdir(local_dir):
-                        info["ckpt_mb"] = round(
-                            sum(
-                                os.path.getsize(os.path.join(dp, f))
-                                for dp, _, fs in os.walk(local_dir)
-                                for f in fs
-                            )
-                            / 1e6,
-                            1,
-                        )
-                on_iteration(info)
-            if reliable_checkpoint_dir is not None:
-                if prev_reliable_dir is not None:
-                    _hadoop_delete(spark, prev_reliable_dir)
-                prev_reliable_dir = it_dir
-
-            # NB: deduping physically between rounds is a MEASURED
-            # win over fusing the dedup into the next window pass
-            # (adjacent-duplicate lag filter, one shuffle/round):
-            # converging CC emits the same (node, min) pair from many
-            # groups, so the carried duplicate volume costs more than
-            # the saved exchange (500k probe: 10.9s -> 15.4s fused)
-            pairs = ccf_dedup(combined)
-
-            if new_pair_count == 0:
-                converged = True
-                break
+        fp = fixed_point(
+            pairs,
+            step,
+            max_steps=max_iterations,
+            carry=carry,
+            measure=measure,
+            until=until,
+            reliable_dir=reliable_checkpoint_dir,
+            on_iteration=on_iteration,
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
-    mapping = pairs.select(
-        F.col("src").alias("node"), F.col("dst").alias("component")
+    # star: one flag per round, 1 = the canonical edge set changed
+    counts = (
+        [int(m != p) for p, m in zip([None, *fp.measures], fp.measures)]
+        if star
+        else [m["new_pairs"] for m in fp.measures]
     )
     return CCFResult(
-        mapping=mapping,
-        iterations=iterations,
-        converged=converged,
+        mapping=fp.state.select(
+            F.col("src").alias("node"), F.col("dst").alias("component")
+        ),
+        iterations=fp.iterations,
+        converged=fp.converged,
         new_pair_counts=counts,
         iterate_path=path,
     )
@@ -699,14 +636,6 @@ def connected_components(
 def component_count(mapping: DataFrame) -> int:
     """Distinct component IDs (reference O10, ccf_experiments.py:137)."""
     return mapping.select("component").distinct().count()
-
-
-def component_count_approx(mapping: DataFrame, rsd: float = 0.02) -> int:
-    """HyperLogLog distinct — the cheap variant for 100 TB-scale graphs
-    where an exact distinct would shuffle every (component) row."""
-    return mapping.agg(
-        F.approx_count_distinct("component", rsd).alias("c")
-    ).collect()[0]["c"]
 
 
 def component_summary(mapping: DataFrame) -> DataFrame:

@@ -1,15 +1,55 @@
-"""Deterministic release of per-iteration localCheckpoint blocks.
+"""One fixed-point loop and the release of its checkpoint generations.
 
-Every iterative loop here follows the O9 discipline (one lazy/eager
-``localCheckpoint`` per round + one materializing action — see
-graph/ccf.py module docstring): lineage is truncated, so each round's
-blocks are the ONLY copy of that round's state. Spark's ContextCleaner
-frees them eventually — when the driver-side Python object is GC'd —
-but "eventually" means a 7-iteration loop retains 7 generations of
-blocks (measured: 1.4 GB on the 500k-edge CC probe; at 100 TB scale it
-is eviction churn or an executor OOM). The moment round i+1 is
-materialized, round i's blocks are garbage by construction; this
-module releases them at exactly that point.
+Every iterative loop in the package is the same loop: build a step,
+materialize it behind a barrier, free the generation the barrier made
+dead, record the iteration and test convergence. ``fixed_point`` is
+that loop, once.
+
+The barrier. Lineage must be truncated each round (plan growth is the
+iterative-loop killer, SURVEY §4.4), so every round's state is a
+checkpoint:
+
+- a LAZY ``localCheckpoint`` when the caller's convergence measure is
+  the forcing action — checkpoint and measure are then ONE job (the
+  reference's ``cache()+count()`` protocol runs two,
+  ccf_connected_components.py:219-221);
+- an EAGER ``localCheckpoint`` when the loop has no measure (a fixed
+  number of steps) or pins its state before measuring it;
+- a RELIABLE barrier when ``reliable_dir`` is set: a parquet write +
+  readback under ``<dir>/iter-NNNN``. A ``localCheckpoint`` pins blocks
+  on executors, and losing ANY executor mid-loop kills the job because
+  truncated lineage cannot recompute; the on-disk generation survives
+  executor loss, which is the right trade on a multi-hour 100 TB run.
+  Parquet write + readback rather than ``df.checkpoint()``
+  deliberately: RDD reliable checkpointing runs a SECOND job to write
+  its files (the reduce-side work recomputes after the counting job —
+  the unpersisted-checkpoint double execution) and stores
+  java-serialized rows, while the write-out executes the round once and
+  stores columnar snappy parquet (measured 159 s -> 97 s for the
+  5M-edge CC fixed point, 853 s -> 424 s at 20M edges, generations ~40%
+  smaller). The readback schema is passed explicitly so a converged
+  0-row generation still reads. The session checkpoint directory is
+  never touched: the barrier is path-addressed.
+
+``per_barrier`` steps are chained LAZILY between barriers (the
+``_RELAX_PER_BARRIER`` batching of graph/analytics.py): a loop whose
+update is a pure function of the previous state, or monotone and a
+no-op at its fixed point, gets the same result for any batching and
+pays the barrier's state write + read less often.
+
+Release. Each round's blocks are the ONLY copy of that round's state.
+Spark's ContextCleaner frees them eventually — when the driver-side
+Python object is GC'd — but "eventually" means a 7-iteration loop
+retains 7 generations of blocks (measured: 1.4 GB on the 500k-edge CC
+probe; at 100 TB scale it is eviction churn or an executor OOM). The
+moment round i+1 is materialized, round i's blocks are garbage by
+construction, and ``fixed_point`` frees them at exactly that point: claimed
+ids go through ``CheckpointCycler``'s ownership rule, and a reliable
+generation's directory through ``hadoop_delete``. The final generation
+backs the result and is never freed (a reliable one is the caller's to
+remove after collecting). Loop-invariant checkpoints the caller made
+for the loop (``invariants``) are freed when it ends, except those the
+result still reads.
 
 Ownership model: ``cycle(df, ...)`` takes the round's checkpointed
 DataFrame(s) and claims exactly the RDD ids that back them (the
@@ -26,10 +66,18 @@ lineage is gone), so ``cycle()`` must only be called when everything
 claimed by the previous ``cycle()`` call is truly dead: after the new
 round's materializing action, and only when the loop has committed to
 advancing (e.g. k-core's "no change" break returns the PREVIOUS round
-— its cycle() call sits inside the advance branch).
+— its cycle() call sits inside the advance branch). Loops of shapes
+``fixed_point`` does not cover (multi-state frontier/visited loops, k-core,
+the trainers, the streaming fold) still drive a cycler by hand.
 """
 
 from __future__ import annotations
+
+import os
+import time
+from dataclasses import dataclass
+from typing import Callable, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,17 +92,24 @@ def checkpoint_rdd_ids(df: DataFrame) -> set[int]:
     leaves — that means the caller did not pass a checkpointed
     DataFrame, which would silently defeat the block release.
     """
+    ids = _rdd_leaf_ids(df)
+    if not ids:
+        raise ValueError(
+            "cycle() requires the checkpointed DataFrame (no LogicalRDD "
+            "in the analyzed plan) — pass the result of localCheckpoint()"
+        )
+    return ids
+
+
+def _rdd_leaf_ids(df: DataFrame) -> set[int]:
+    """Ids of the RDDs under every ``LogicalRDD`` leaf of ``df``'s
+    analyzed plan (empty for a plan that reads no checkpoint)."""
     ids: set[int] = set()
     it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while it.hasNext():
         leaf = it.next()
         if leaf.getClass().getSimpleName() == "LogicalRDD":
             ids.add(int(leaf.rdd().id()))
-    if not ids:
-        raise ValueError(
-            "cycle() requires the checkpointed DataFrame (no LogicalRDD "
-            "in the analyzed plan) — pass the result of localCheckpoint()"
-        )
     return ids
 
 
@@ -145,3 +200,113 @@ class CheckpointCycler:
         if self.prev:
             _unpersist_rdds(self.spark, self.prev - new_ids)
         self.prev = new_ids
+
+
+def _dir_mb(path: str) -> float | None:
+    """On-disk MB of a generation directory; None when it is not a
+    visible local path. Hadoop may render a local URI as file:///p,
+    file://p or file:/p, so parse rather than slice a prefix."""
+    local = urlparse(path).path if path.startswith("file:") else path
+    if not os.path.isdir(local):
+        return None
+    size = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(local)
+        for f in fs
+    )
+    return round(size / 1e6, 1)
+
+
+@dataclass
+class FixedPoint:
+    """Outcome of ``fixed_point``: the final state, the number of steps
+    taken, whether ``until`` fired, and one measure dict per barrier."""
+
+    state: DataFrame
+    iterations: int
+    converged: bool
+    measures: list[dict]
+
+
+def fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    max_steps: int,
+    per_barrier: int = 1,
+    carry: Callable[[DataFrame], DataFrame] | None = None,
+    measure: Callable[[DataFrame], dict] | None = None,
+    until: Callable[[dict, dict | None], bool] | None = None,
+    eager: bool | None = None,
+    reliable_dir: str | None = None,
+    own_state: bool = False,
+    invariants: Sequence[DataFrame] = (),
+    on_iteration: Callable[[dict], None] | None = None,
+) -> FixedPoint:
+    """Run ``step`` to a fixed point, or for ``max_steps`` steps.
+
+    Each barrier chains ``min(per_barrier, steps left)`` steps lazily
+    and materializes the last; ``carry`` maps a step's output to the
+    next step's input (identity when None), so a step may emit a
+    change flag that only the measure reads. ``measure(frame)`` runs on
+    the materialized frame and returns named figures; the loop stops
+    when ``until(figures, previous figures)`` holds — by default when
+    every figure is 0. ``eager`` defaults to "no measure".
+    ``own_state`` lets the release rule free a checkpointed initial
+    state after the first barrier; ``invariants`` (the caller's
+    loop-invariant checkpoints) are freed at the end unless the final
+    state reads them. ``on_iteration`` gets ``{iteration, wall_sec,
+    **figures}`` per barrier, plus ``checkpoint_dir`` and ``ckpt_mb``
+    in reliable mode; exceptions propagate.
+    """
+    spark = state.sparkSession
+    carry = carry or (lambda df: df)
+    until = until or (lambda figures, _prev: not any(figures.values()))
+    if eager is None:
+        eager = measure is None
+    cycler = CheckpointCycler(spark)
+    if own_state:
+        cycler.cycle(state)
+    done, converged, measures, prev_dir = 0, False, [], None
+    while done < max_steps and not converged:
+        t0 = time.perf_counter()
+        take = min(per_barrier, max_steps - done)
+        frame = step(state)
+        for _ in range(take - 1):
+            frame = step(carry(frame))
+        done += take
+        if reliable_dir is None:
+            frame = frame.localCheckpoint(eager=eager)
+        else:
+            it_dir = f"{reliable_dir}/iter-{done:04d}"
+            frame.write.mode("overwrite").parquet(it_dir)
+            frame = spark.read.schema(frame.schema).parquet(it_dir)
+        figures = measure(frame) if measure is not None else {}
+        # the previous generation is dead once this one materialized
+        # (the measure above, or the eager checkpoint); reliable
+        # generations hold no blocks — their directories are deleted
+        if reliable_dir is None:
+            cycler.cycle(frame)
+        if on_iteration is not None:
+            info = {
+                "iteration": done,
+                "wall_sec": round(time.perf_counter() - t0, 3),
+                **figures,
+            }
+            if reliable_dir is not None:
+                info["checkpoint_dir"] = it_dir
+                if (mb := _dir_mb(it_dir)) is not None:
+                    info["ckpt_mb"] = mb
+            on_iteration(info)
+        if reliable_dir is not None:
+            if prev_dir is not None:
+                hadoop_delete(spark, prev_dir)
+            prev_dir = it_dir
+        state = carry(frame)
+        if measure is not None:
+            converged = until(figures, measures[-1] if measures else None)
+            measures.append(figures)
+    if invariants:
+        owned = set().union(*map(checkpoint_rdd_ids, invariants))
+        _unpersist_rdds(spark, owned - _rdd_leaf_ids(state))
+    return FixedPoint(state, done, converged, measures)

@@ -12,9 +12,15 @@ trade at 100 TB when the graph may contain high-diameter structures
 Both operate on the same DataFrame(src string, dst string) edge lists
 with LEXICOGRAPHIC min semantics (S1), and both produce the same
 (node, component) mapping with the representative excluded (S3), so
-``connected_components_star`` is a drop-in for
-``connected_components`` when iteration-count conformance with the
-reference does not matter. Property tests assert mapping equality.
+``connected_components(..., algorithm="star")`` is a drop-in for the
+CCF default when iteration-count conformance with the reference does
+not matter. Property tests assert mapping equality. Both loops run
+through ``fixed_point`` (graph/checkpointing.py) and
+the same intake (sizing count, shuffle-partition conf scope).
+``iterations`` counts star ROUNDS (one large + one small each), which
+are NOT comparable to CCF iteration counts; ``new_pair_counts``
+records a per-round change flag (1 = changed, 0 = fixed point), as
+the reference's emission counter has no analogue here.
 
 Physical shape per round: two single-shuffle window passes
 (large-star, small-star), one lazy localCheckpoint, and one
@@ -34,16 +40,11 @@ point every edge is (node, component-min).
 
 from __future__ import annotations
 
-import os
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ccf import CCFResult, _undirected
-
-MAX_ROUNDS = 50
+from .ccf import _undirected
 
 
 def large_star(edges: DataFrame) -> DataFrame:
@@ -93,24 +94,11 @@ def small_star(edges: DataFrame) -> DataFrame:
     return key_pairs.unionAll(val_pairs)
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
-    reliable_checkpoint_dir: str | None = None,
-    n_edges_hint: int | None = None,
-    on_iteration=None,
-) -> CCFResult:
-    """Fixed point of alternating large-star / small-star.
+def star_round(pairs: DataFrame) -> DataFrame:
+    """One star round: large-star, then small-star, deduped to the
+    canonical (larger, smaller) edge set.
 
-    Returns the same CCFResult shape as ``connected_components``;
-    ``iterations`` counts star ROUNDS (one large + one small each),
-    which are NOT comparable to CCF iteration counts —
-    use CCF for reference-conformance metrics.
-    ``new_pair_counts`` records the per-round fingerprint-change flag
-    (1 = changed, 0 = fixed point) rather than the reference's
-    emission counter, which has no analogue here.
-
-    Why this exists at 100 TB (round-11 verdict item 1): CCF's
+    Why star exists at 100 TB (round-11 verdict item 1): CCF's
     intermediate volume peaks mid-convergence — iteration 5 of the
     20M-edge run emits 292.8M pairs from a 20M-edge input (14.6×),
     and the multiplier grows with component size, because every
@@ -122,137 +110,23 @@ def connected_components_star(
     per-round state is therefore bounded by the input, not by the
     convergence trajectory — the property that survives a 100×
     scale-up.
-
-    ``reliable_checkpoint_dir`` / ``n_edges_hint`` / ``on_iteration``
-    have the same contracts as on ``connected_components``: parquet
-    write+readback barrier per round with superseded generations
-    deleted (executor-loss tolerance for multi-hour runs; the final
-    generation backs the returned mapping and is the caller's to
-    remove after collecting), skip the sizing count when cardinality
-    is known, and a per-round observability hook — its dict reports
-    ``pairs`` (the canonical edge-set size, the bounded-intermediate
-    metric) instead of CCF's ``new_pairs`` emission counter.
     """
-    import time
+    return small_star(large_star(pairs)).dropDuplicates(["src", "dst"])
 
-    spark = edges.sparkSession
-    pairs = edges.select(
-        F.col(edges.columns[0]).alias("src"),
-        F.col(edges.columns[1]).alias("dst"),
-    )
 
-    from map_reduce_project_spark.graph.ccf import (
-        _loop_shuffle_partitions,
-    )
-
-    n_edges = n_edges_hint if n_edges_hint is not None else pairs.count()
-    target = _loop_shuffle_partitions(n_edges)
-    small = target <= 64
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    if small:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if pairs.rdd.getNumPartitions() > target:
-        pairs = pairs.coalesce(target)
-
-    def fingerprint(df: DataFrame):
-        """(row_count, exact decimal sum of per-row xxhash64) — an
-        order-insensitive set fingerprint computed in one tiny
-        aggregate job (the materializing action for the round's
-        checkpoint in default mode; a cheap columnar readback scan in
-        reliable mode). decimal(38,0) keeps the sum exact under ANSI
-        mode (a long sum of 64-bit hashes overflows)."""
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    rounds = 0
-    converged = False
-    changes: list[int] = []
-    prev_fp = None
-    prev_reliable_dir: str | None = None
-
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        hadoop_delete as _hadoop_delete,
-    )
-
-    cycler = CheckpointCycler(spark)
-
-    try:
-        while rounds < max_rounds:
-            rounds += 1
-            it_t0 = time.perf_counter()
-            stepped = small_star(large_star(pairs)).dropDuplicates(
-                ["src", "dst"]
-            )
-            if reliable_checkpoint_dir is not None:
-                # same parquet write+readback barrier as the CCF loop
-                # (graph/ccf.py): one execution per round, columnar
-                # generations, files survive executor loss
-                it_dir = f"{reliable_checkpoint_dir}/round-{rounds:04d}"
-                stepped.write.mode("overwrite").parquet(it_dir)
-                nxt = spark.read.schema(stepped.schema).parquet(it_dir)
-            else:
-                nxt = stepped.localCheckpoint(eager=False)
-            fp = fingerprint(nxt)
-            pairs = nxt
-            # round r-1's checkpoint is dead once round r is
-            # materialized (fingerprint above); round r survives as
-            # the result if we break below
-            if reliable_checkpoint_dir is None:
-                cycler.cycle(pairs)
-            if on_iteration is not None:
-                info = {
-                    "iteration": rounds,
-                    "wall_sec": round(time.perf_counter() - it_t0, 3),
-                    "pairs": fp[0],
-                }
-                if reliable_checkpoint_dir is not None:
-                    info["checkpoint_dir"] = it_dir
-                    local_dir = (
-                        urlparse(it_dir).path
-                        if it_dir.startswith("file:")
-                        else it_dir
-                    )
-                    if os.path.isdir(local_dir):
-                        info["ckpt_mb"] = round(
-                            sum(
-                                os.path.getsize(os.path.join(dp, f))
-                                for dp, _, fs in os.walk(local_dir)
-                                for f in fs
-                            )
-                            / 1e6,
-                            1,
-                        )
-                on_iteration(info)
-            if reliable_checkpoint_dir is not None:
-                if prev_reliable_dir is not None:
-                    _hadoop_delete(spark, prev_reliable_dir)
-                prev_reliable_dir = it_dir
-            if fp == prev_fp:
-                converged = True
-                changes.append(0)
-                break
-            changes.append(1)
-            prev_fp = fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-    mapping = pairs.select(
-        F.col("src").alias("node"), F.col("dst").alias("component")
-    )
-    return CCFResult(
-        mapping=mapping,
-        iterations=rounds,
-        converged=converged,
-        new_pair_counts=changes,
-        iterate_path="star",
-    )
+def star_fingerprint(df: DataFrame) -> dict:
+    """``{"pairs": row count, "fingerprint": exact sum of per-row
+    xxhash64}`` — an order-insensitive set fingerprint computed in one
+    tiny aggregate job (the materializing action for the round's
+    checkpoint in default mode; a cheap columnar readback scan in
+    reliable mode). The loop has converged when a round's fingerprint
+    equals the previous round's. decimal(38,0) keeps the sum exact
+    under ANSI mode (a long sum of 64-bit hashes overflows)."""
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("h"),
+    ).collect()[0]
+    return {"pairs": row["n"], "fingerprint": int(row["h"])}

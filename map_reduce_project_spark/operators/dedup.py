@@ -1021,11 +1021,12 @@ def duplicate_spans(
     # exploded table is corpus x k-grams rows: at the 5M-doc depth
     # tier (115M grams, ~2.8 GB + the token arrays) storing it
     # evicted/thrashed the block manager and the line REGRESSED
-    # 81 -> 135 s. The checkpoints are therefore gated on the EXACT
-    # kg cardinality, computed with one narrow corpus pass (size of
-    # the split only — no explode, no shuffle) that runs ONLY on the
-    # probe path, which already pays construction-time actions by
-    # contract; pinned paths (skew_robust set / max_df) stay fully
+    # 81 -> 135 s. The checkpoints are therefore gated on an ESTIMATE
+    # of the kg cardinality — 100 x the gram count of a 1% Bernoulli
+    # sample of the corpus (size of the split only, no explode, no
+    # shuffle) — that runs ONLY on the probe path, which already pays
+    # construction-time actions by contract; pinned paths (skew_robust
+    # set / max_df) stay fully
     # lazy and unmaterialized — at 100 TB storing corpus-scale gram
     # state is never the right trade, the extra explode pass is.
     toked = docs.select(F.col(id_col), F.expr(toks).alias("_toks")).where(

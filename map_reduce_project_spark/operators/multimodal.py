@@ -2021,14 +2021,6 @@ def _jpeg_extend(amp: int, size: int) -> int:
     return amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
 
 
-def _fd16(x: int) -> int:
-    """Floor-divide by 2^16 (toward -infinity, also for negatives) —
-    the fixed-point descale step of the YCbCr conversion. Spelled as
-    a floor so the DuckDB oracle replays it with FLOOR(x / 65536.0)
-    regardless of either engine's native shift/div semantics."""
-    return x >> 16  # python's >> floors
-
-
 def decode_jpeg_dc(b: bytes) -> np.ndarray:
     """REAL T.81 baseline decode of the DC-only profile: walks the
     marker stream, parses DQT/SOF0/DHT/SOS, Huffman-decodes every

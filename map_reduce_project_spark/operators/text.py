@@ -1133,9 +1133,7 @@ def bpe_apply(
     tokenizer-training run reports."""
     from pyspark.sql.window import Window
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
+    from map_reduce_project_spark.graph.checkpointing import fixed_point
 
     tok = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -1145,8 +1143,11 @@ def bpe_apply(
     before = tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens_before")
     )
-    cycler = CheckpointCycler(docs.sparkSession)
-    for left, right in merges:
+    ranked = iter(merges)
+
+    def _merge(tok: DataFrame) -> DataFrame:
+        """Splice the next merge in rank order."""
+        left, right = next(ranked)
         pairs = tok.withColumn("nxt", F.lead("tok").over(w_doc))
         matches = (
             pairs.where((F.col("tok") == left) & (F.col("nxt") == right))
@@ -1160,7 +1161,7 @@ def bpe_apply(
             .where(F.col("rn") % 2 == 1)
             .select("doc_id", F.col("pos").alias("mpos"))
         )
-        tok = (
+        return (
             tok.join(
                 matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
                 ["doc_id", "pos"],
@@ -1180,8 +1181,9 @@ def bpe_apply(
             )
             .withColumn("pos", F.row_number().over(w_doc) - 1)
             .select("doc_id", "pos", "tok")
-        ).localCheckpoint(eager=True)
-        cycler.cycle(tok)
+        )
+
+    tok = fixed_point(tok, _merge, max_steps=len(merges)).state
     after = tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens_after")
     )

@@ -27,7 +27,6 @@ from map_reduce_project_spark.graph.analytics import (
     pagerank_int,
     triangle_count,
 )
-from map_reduce_project_spark.graph.star import connected_components_star
 from map_reduce_project_spark.queries import Query
 from map_reduce_project_spark.sources.io import read_table
 
@@ -126,7 +125,9 @@ def cc_star_orders_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to CCF's O(diameter) loop (graph/star.py). Produces
     the identical (node, component) mapping, so it shares CCF's exact
     SQL oracle."""
-    return connected_components_star(_order_edges(spark, sf_dir)).mapping
+    return connected_components(
+        _order_edges(spark, sf_dir), algorithm="star"
+    ).mapping
 
 
 def cc_star_reliable_orders(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -802,7 +802,7 @@ def test_algorithm_star_dispatch_matches_ccf(spark):
 
 def test_algorithm_star_reliable_barrier(spark, tmp_path):
     # star + reliable mode: identical mapping, one surviving parquet
-    # generation (round-NNNN dirs), per-round hook reports the bounded
+    # generation (iter-NNNN dirs, as CCF), per-round hook reports the bounded
     # canonical edge-set size
     import os
 
@@ -823,7 +823,7 @@ def test_algorithm_star_reliable_barrier(spark, tmp_path):
         for dp, _, fs in os.walk(ckpt)
         if fs
     }
-    assert live == {f"round-{res.iterations:04d}"}
+    assert live == {f"iter-{res.iterations:04d}"}
     # hook fired once per round with the bounded-intermediate metric
     assert len(seen) == res.iterations
     assert all("pairs" in i and "ckpt_mb" in i for i in seen)

@@ -65,6 +65,21 @@ def test_local_empty_graph(spark):
     assert res.mapping.columns == ["node", "component"]
 
 
+def test_local_path_rejects_non_string_ids(spark):
+    # S1: ids are strings (lexicographic min). The local path builds
+    # string Arrow arrays, so long ids must fail loudly, before any
+    # conversion, naming the contract — not with an Arrow type error
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    with pytest.raises(ValueError, match="string node ids.*src bigint"):
+        connected_components(edges, local_threshold=10**6)
+    # the distributed path is unchanged (no cast: min stays numeric)
+    res = connected_components(edges)
+    assert {(r.node, r.component) for r in res.mapping.collect()} == {
+        (2, 1),
+        (3, 1),
+    }
+
+
 def test_skew_autodetect_star_graph(spark):
     # star: 1 hub ("0") with 3000 spokes — the 1-hub/1M-spokes shape at
     # reduced scale. With a reduced degree threshold the autodetect

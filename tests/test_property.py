@@ -6,10 +6,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from map_reduce_project_spark.graph import (
-    connected_components,
-    connected_components_star,
-)
+from map_reduce_project_spark.graph import connected_components
 from map_reduce_project_spark.graph.generators import edges_df
 
 node = st.integers(min_value=0, max_value=30).map(str)
@@ -69,7 +66,7 @@ def test_ccf_matches_union_find(spark, edges):
 @given(st.lists(edge, min_size=1, max_size=40))
 def test_star_matches_union_find(spark, edges):
     expected = union_find_mapping(edges)
-    res = connected_components_star(edges_df(spark, edges))
+    res = connected_components(edges_df(spark, edges), algorithm="star")
     got = {(r.node, r.component) for r in res.mapping.collect()}
     assert got == expected
     assert res.converged

@@ -8,7 +8,6 @@ import pytest
 
 from map_reduce_project_spark.graph import (
     connected_components,
-    connected_components_star,
     generate_chain_graph,
     generate_cluster_graph,
     generate_random_graph,
@@ -19,7 +18,7 @@ from tests.test_ccf import FIG5_EDGES, FIG5_EXPECTED, mapping_set
 
 
 def test_star_golden_figure5(spark):
-    res = connected_components_star(edges_df(spark, FIG5_EDGES))
+    res = connected_components(edges_df(spark, FIG5_EDGES), algorithm="star")
     assert mapping_set(res) == FIG5_EXPECTED
     assert res.converged
 
@@ -39,7 +38,7 @@ def test_star_golden_figure5(spark):
 )
 def test_star_matches_ccf(spark, edges):
     ccf = connected_components(edges_df(spark, edges))
-    star = connected_components_star(edges_df(spark, edges))
+    star = connected_components(edges_df(spark, edges), algorithm="star")
     assert mapping_set(star) == mapping_set(ccf)
     assert star.converged
 
@@ -51,7 +50,7 @@ def test_star_rounds_sublinear_on_chain(spark):
     n = 200
     edges = generate_chain_graph(n)
     ccf = connected_components(edges_df(spark, edges))
-    star = connected_components_star(edges_df(spark, edges))
+    star = connected_components(edges_df(spark, edges), algorithm="star")
     assert mapping_set(star) == mapping_set(ccf)
     assert star.iterations < ccf.iterations
 
@@ -78,8 +77,8 @@ def test_triangle_count_known_graphs(spark):
 
 
 def test_star_empty_and_self_loop(spark):
-    res = connected_components_star(
-        edges_df(spark, [("a", "a")])
+    res = connected_components(
+        edges_df(spark, [("a", "a")]), algorithm="star"
     )
     assert mapping_set(res) == set()
     assert res.converged
