@@ -864,10 +864,8 @@ def main() -> None:
             graph_fn, expect_path: str, on_iteration=None, **cc_kwargs
         ) -> int:
             ckpt = tempfile.mkdtemp(prefix="bench_ccf_rel_")
-            # star rounds write round-NNNN generation dirs, the CCF
-            # loop iter-NNNN — the one-surviving-generation invariant
-            # is the same
-            gen = "round" if cc_kwargs.get("algorithm") == "star" else "iter"
+            # both algorithms write iter-NNNN generation dirs through
+            # the shared fixed-point barrier; exactly one survives
             try:
                 res = connected_components(
                     graph_fn(),
@@ -883,7 +881,7 @@ def main() -> None:
                     for dp, _, fs in os.walk(ckpt)
                     if fs
                 }
-                assert live == {f"{gen}-{res.iterations:04d}"}, live
+                assert live == {f"iter-{res.iterations:04d}"}, live
                 return res.iterations
             finally:
                 shutil.rmtree(ckpt, ignore_errors=True)

@@ -21,6 +21,7 @@ windows, no cross joins.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -28,7 +29,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .ccf import _undirected
-from .checkpointing import fixed_point
+from .checkpointing import (
+    CheckpointCycler,
+    _unpersist_rdds,
+    checkpoint_rdd_ids,
+    fixed_point,
+)
 
 # How many Bellman-Ford relaxations the sssp loops chain LAZILY between
 # materialization barriers (eager localCheckpoint + convergence count).
@@ -139,10 +145,6 @@ def _bfs_hops_on(
     dst) adjacency — callers that run several sweeps on one graph
     (cc_diameter_estimate's double sweep) build the adjacency once.
     ``seed_rows`` must be (node, hop=0)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     visited = seed_rows.localCheckpoint(eager=True)
     frontier = visited
     cycler = CheckpointCycler(und.sparkSession)
@@ -424,35 +426,28 @@ def k_core(
     ``edges`` is an undirected edge list (first two columns used);
     self-loops and duplicates are removed.
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     cur = canonical_undirected(edges)
-    n_cur = cur.count()
-    cycler = CheckpointCycler(edges.sparkSession)
-    for _ in range(max_iterations):
-        if n_cur == 0:
-            break
+    n0 = cur.count()
+
+    def _peel(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("src")
-        nxt = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
+        return cur.join(keep, "src", "left_semi").join(
+            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            # `cur` (the previous generation) is the result here — it
-            # was NOT cycled past, so its blocks are still live
-            break
-        cur, n_cur = nxt, n_nxt
-        # committed to advancing: the generation before `nxt` is dead
-        cycler.cycle(cur)
-    if n_cur == 0:
-        return cur.groupBy("src").agg(
-            F.count("*").alias("deg")
-        ).select(F.col("src").alias("node"), "deg")
+
+    def _stable(figures: dict, prev: dict | None) -> bool:
+        # peeling only shrinks the edge set, so an unchanged count is
+        # an unchanged set: the last generation equals the one before
+        return figures["edges"] in (0, (prev or {"edges": n0})["edges"])
+
+    cur = fixed_point(
+        cur,
+        _peel,
+        max_steps=max_iterations if n0 else 0,
+        measure=lambda df: {"edges": df.count()},
+        until=_stable,
+    ).state
     return cur.groupBy("src").agg(F.count("*").cast("long").alias("deg")).select(
         F.col("src").alias("node"), "deg"
     )
@@ -629,6 +624,17 @@ def personalized_pagerank_int(
     ).state
 
 
+def _node_adjacency(edges: DataFrame) -> DataFrame:
+    """The undirected simple adjacency as (node, dst), checkpointed
+    once: every BFS/DP level joins it, and an unpinned subtree re-runs
+    the scan -> canonicalize -> expand work per level."""
+    return (
+        canonical_undirected(edges)
+        .withColumnRenamed("src", "node")
+        .localCheckpoint(eager=True)
+    )
+
+
 def per_seed_bfs(
     edges: DataFrame, seeds: DataFrame, max_hops: int = 10
 ) -> DataFrame:
@@ -664,20 +670,9 @@ def per_seed_bfs(
     if k < 3 or k > 62:
         return _per_seed_bfs_rows(edges, seeds, max_hops)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    # round 12: checkpoint the adjacency once — _bfs_mask_levels joins
-    # it every level, re-deriving the scan subtree per level otherwise
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = _node_adjacency(edges)
     seed_idx = _seed_bit_index(seed_rows)
-    cycler = CheckpointCycler(edges.sparkSession)
-    levels = _bfs_mask_levels(und, seed_idx, max_hops, cycler)
+    levels = _bfs_mask_levels(und, seed_idx, max_hops)
     reached = levels[0].withColumn("hop", F.lit(0))
     for h, lv in enumerate(levels[1:], start=1):
         reached = reached.unionAll(lv.withColumn("hop", F.lit(h)))
@@ -942,13 +937,13 @@ def _bfs_mask_levels(
     und: DataFrame,
     seed_idx: DataFrame,
     max_hops: int,
-    cycler,
 ) -> list[DataFrame]:
     """Bitmask-batched BFS core: returns one (node, mask) DataFrame
     per hop level (list index = hop; every one eagerly checkpointed
     and RESULT-owned — the cycler only ever claims the merged
     visited-mask scratch). ``mask`` bit i set means seed ``idx = i``
     FIRST reached ``node`` at exactly that level."""
+    cycler = CheckpointCycler(und.sparkSession)
     frontier = seed_idx.select(
         F.col("seed").alias("node"),
         F.expr("shiftleft(CAST(1 AS BIGINT), idx)").alias("mask"),
@@ -994,16 +989,7 @@ def _per_seed_bfs_rows(
 ) -> DataFrame:
     """(seed, node)-keyed simultaneous BFS — the general-k path (and
     the property-pin oracle for the bitmask batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    # round 12: same once-only adjacency checkpoint as per_seed_bfs
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = _node_adjacency(edges)
     frontier = (
         seeds.select(F.col("node").alias("seed"))
         .distinct()
@@ -1231,17 +1217,10 @@ def k_truss(
     the truss itself. Raises if k < 3 (k-truss is defined from 3)."""
     if k < 3:
         raise ValueError(f"k_truss needs k >= 3, got {k}")
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     cycler = CheckpointCycler(edges.sparkSession)
     cur = canonical_pairs(edges).localCheckpoint(eager=True)
     n_cur = cur.count()
     cycler.cycle(cur)
-    kept = cur.withColumn("support", F.lit(0).cast("long")).where(
-        F.lit(n_cur == 0)
-    )
     for _ in range(max_rounds):
         oriented = degree_oriented_edges(cur).localCheckpoint(eager=False)
         # volume-size the round's wedge join and support agg: the
@@ -1339,18 +1318,9 @@ def shortest_path_counts(
     if k < 3 or k > 62:
         return _shortest_path_counts_rows(edges, seeds, max_hops)
 
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = _node_adjacency(edges)
     seed_idx = _seed_bit_index(seed_rows)
-    mask_cycler = CheckpointCycler(edges.sparkSession)
-    masks = _bfs_mask_levels(und, seed_idx, max_hops, mask_cycler)
+    masks = _bfs_mask_levels(und, seed_idx, max_hops)
 
     # counts_0: the seed's own element is 1 (one zero-length path)
     cnt = seed_idx.select(
@@ -1361,7 +1331,6 @@ def shortest_path_counts(
         ).alias("cnt"),
     ).localCheckpoint(eager=True)
     per_level = [cnt]
-    cycler = CheckpointCycler(edges.sparkSession)
     for t in range(1, len(masks)):
         gathered = (
             und.join(cnt, "node")
@@ -1392,7 +1361,7 @@ def shortest_path_counts(
             break
         per_level.append(cnt)
         # per-level count tables are RESULT pieces; nothing to cycle
-        # (the masks are owned by mask_cycler and stay live)
+        # (the masks are result-owned and stay live)
     out = None
     for t, lvl in enumerate(per_level):
         rows = (
@@ -1414,17 +1383,7 @@ def _shortest_path_counts_rows(
 ) -> DataFrame:
     """(seed, node)-keyed sigma DP — the general-k path (and the
     property-pin oracle for the array batch above)."""
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
-    # pin the adjacency: it feeds EVERY DP level's join, and without
-    # the checkpoint each level re-runs canonical_pairs' dedup shuffle
-    und = (
-        canonical_undirected(edges)
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
+    und = _node_adjacency(edges)
     dist = per_seed_bfs(edges, seeds, max_hops).localCheckpoint(eager=True)
 
     level = (
@@ -1701,12 +1660,6 @@ def strongly_connected_components_directed(
     dissolve the graph (worst case is a chain of SCCs; each round
     peels at least one full SCC plus every trimmable node).
     """
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-        _unpersist_rdds,
-        checkpoint_rdd_ids,
-    )
-
     spark = edges.sparkSession
     if local_threshold is not None:
         simple = _directed_simple_edges(edges)
@@ -1720,16 +1673,7 @@ def strongly_connected_components_directed(
                 # (like the distributed peel's), not a hardcoded
                 # string — an int-keyed graph of pure self-loops must
                 # not flip column types between the two paths
-                key_t = simple.schema["src"].dataType
-                return spark.createDataFrame(
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("node", key_t),
-                            T.StructField("scc", key_t),
-                        ]
-                    ),
-                )
+                return _empty_scc(simple)
             import pandas as pd
 
             pdf = pd.DataFrame(
@@ -1830,20 +1774,19 @@ def strongly_connected_components_directed(
             )
     if not pieces:
         # key-typed empty schema, matching the local fast path
-        key_t = cur.schema["src"].dataType
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("node", key_t),
-                    T.StructField("scc", key_t),
-                ]
-            ),
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionAll(p)
-    return out
+        return _empty_scc(cur)
+    return reduce(DataFrame.unionAll, pieces)
+
+
+def _empty_scc(edges: DataFrame) -> DataFrame:
+    """Empty (node, scc) result typed by ``edges``' src key."""
+    key_t = edges.schema["src"].dataType
+    return edges.sparkSession.createDataFrame(
+        [],
+        T.StructType(
+            [T.StructField("node", key_t), T.StructField("scc", key_t)]
+        ),
+    )
 
 
 def dag_longest_path_levels(
@@ -1937,10 +1880,6 @@ def minimum_spanning_forest(
     operator is property-tested against a total-order Kruskal oracle
     instead of the DuckDB gate — the documented pytest tier."""
     from map_reduce_project_spark.graph.ccf import connected_components
-    from map_reduce_project_spark.graph.checkpointing import (
-        CheckpointCycler,
-    )
-
     c = edges.columns
     spark = edges.sparkSession
     canon = (
@@ -1970,22 +1909,20 @@ def minimum_spanning_forest(
     cycler = CheckpointCycler(spark)
     cycler.cycle(canon, comp)
     pieces: list[DataFrame] = []
+
+    def _ends(e: DataFrame) -> DataFrame:
+        """``e`` with both endpoints' current labels, csrc and cdst."""
+        for end in ("src", "dst"):
+            e = e.join(
+                comp.select(
+                    F.col("node").alias(end), F.col("comp").alias(f"c{end}")
+                ),
+                end,
+            )
+        return e
+
     for _ in range(max_rounds):
-        labeled = (
-            canon.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .where(F.col("csrc") != F.col("cdst"))
-        )
+        labeled = _ends(canon).where(F.col("csrc") != F.col("cdst"))
         incident = labeled.select(
             F.col("csrc").alias("c"), "weight", "src", "dst"
         ).unionAll(
@@ -2003,20 +1940,8 @@ def minimum_spanning_forest(
         pieces.append(winners)
         # contract: CC over the winner COMPONENT graph; the CC mapping
         # omits representatives (S3) -> coalesce to identity
-        wl = (
-            winners.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
+        wl = _ends(winners).select(
+            F.col("csrc").alias("src"), F.col("cdst").alias("dst")
         )
         contraction = connected_components(wl).mapping.select(
             F.col("node").alias("comp"), F.col("component").alias("newc")
@@ -2035,20 +1960,7 @@ def minimum_spanning_forest(
     else:
         # if cross-component edges remain, the forest is incomplete
         remaining = (
-            canon.join(
-                comp.select(
-                    F.col("node").alias("src"), F.col("comp").alias("csrc")
-                ),
-                "src",
-            )
-            .join(
-                comp.select(
-                    F.col("node").alias("dst"), F.col("comp").alias("cdst")
-                ),
-                "dst",
-            )
-            .where(F.col("csrc") != F.col("cdst"))
-            .count()
+            _ends(canon).where(F.col("csrc") != F.col("cdst")).count()
         )
         if remaining:
             raise ValueError(
@@ -2059,7 +1971,4 @@ def minimum_spanning_forest(
         return spark.createDataFrame(
             [], "src string, dst string, weight double"
         )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionAll(p)
-    return out
+    return reduce(DataFrame.unionAll, pieces)

@@ -65,10 +65,11 @@ SAFETY: an unpersisted localCheckpoint CANNOT be recomputed (the
 lineage is gone), so ``cycle()`` must only be called when everything
 claimed by the previous ``cycle()`` call is truly dead: after the new
 round's materializing action, and only when the loop has committed to
-advancing (e.g. k-core's "no change" break returns the PREVIOUS round
-— its cycle() call sits inside the advance branch). Loops of shapes
-``fixed_point`` does not cover (multi-state frontier/visited loops, k-core,
-the trainers, the streaming fold) still drive a cycler by hand.
+advancing (a loop that may return the PREVIOUS round keeps its cycle()
+call inside the advance branch). Loops of shapes ``fixed_point`` does
+not cover (multi-state frontier/visited loops, k-truss's per-round
+scratch checkpoint, the trainers, the streaming fold) still drive a
+cycler by hand.
 """
 
 from __future__ import annotations

@@ -1004,6 +1004,54 @@ def gopher_line_rules(
     )
 
 
+def _bpe_splice(
+    tok: DataFrame, pairs: DataFrame, left: str, right: str, w_doc
+) -> DataFrame:
+    """Apply one merge GREEDY-LEFTMOST to a (doc_id, pos, tok) token
+    table, finding matches in ``pairs`` (its rows with ``nxt``, the
+    next token): overlapping matches form runs ("a a a" matches at two
+    positions), and the gaps-and-islands trick (pos - row_number
+    grouping, keep odd ranks within each run) selects precisely the
+    non-overlapping leftmost set with no sequential scan; then splice
+    (drop consumed positions, concat the pair, re-densify pos with a
+    row_number). Returns (doc_id, pos, tok)."""
+    from pyspark.sql.window import Window
+
+    matches = (
+        pairs.where((F.col("tok") == left) & (F.col("nxt") == right))
+        .withColumn("grp", F.col("pos") - F.row_number().over(w_doc))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc_id", "grp").orderBy("pos")
+            ),
+        )
+        .where(F.col("rn") % 2 == 1)
+        .select("doc_id", F.col("pos").alias("mpos"))
+    )
+    return (
+        tok.join(
+            matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
+            ["doc_id", "pos"],
+            "left",
+        )
+        .join(
+            matches.selectExpr("doc_id", "mpos + 1 as pos", "1 as _drop"),
+            ["doc_id", "pos"],
+            "left",
+        )
+        .where(F.col("_drop").isNull())
+        .withColumn(
+            "tok",
+            F.when(
+                F.col("_merge") == 1, F.concat(F.col("tok"), F.lit(right))
+            ).otherwise(F.col("tok")),
+        )
+        .withColumn("pos", F.row_number().over(w_doc) - 1)
+        .select("doc_id", "pos", "tok")
+    )
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 3,
@@ -1018,12 +1066,7 @@ def bpe_train(
     pass + partial/final agg; (2) pick the most frequent pair
     (deterministic tie-break: count desc, then left/right asc);
     (3) apply it GREEDY-LEFTMOST exactly like the reference BPE
-    algorithm — overlapping matches form runs ("a a a" matches at two
-    positions), and the gaps-and-islands trick (pos - row_number
-    grouping, keep odd ranks within each run) selects precisely the
-    non-overlapping leftmost set with no sequential scan;
-    (4) splice (drop consumed positions, concat the pair, re-densify
-    pos with a row_number).
+    algorithm and splice it in (``_bpe_splice``).
 
     Everything is integer counts, string concat, and window
     functions, so a DuckDB oracle replays the identical rounds
@@ -1065,49 +1108,9 @@ def bpe_train(
         left, right, cnt = best_row[0]
         merges.append((rank, left, right, left + right, cnt))
 
-        is_match = (F.col("tok") == left) & (F.col("nxt") == right)
-        marked = pairs.select(
-            "doc_id", "pos", "tok", "nxt", is_match.alias("m")
+        tok = _bpe_splice(tok, pairs, left, right, w_doc).localCheckpoint(
+            eager=True
         )
-        w_runs = Window.partitionBy("doc_id").orderBy("pos")
-        matches = (
-            marked.where("m")
-            .withColumn(
-                "grp", F.col("pos") - F.row_number().over(w_runs)
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("doc_id", "grp").orderBy("pos")
-                ),
-            )
-            .where(F.col("rn") % 2 == 1)
-            .select("doc_id", F.col("pos").alias("mpos"))
-        )
-        tok = (
-            tok.join(
-                matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .join(
-                matches.selectExpr(
-                    "doc_id", "mpos + 1 as pos", "1 as _drop"
-                ),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .where(F.col("_drop").isNull())
-            .withColumn(
-                "tok",
-                F.when(
-                    F.col("_merge") == 1,
-                    F.concat(F.col("tok"), F.lit(right)),
-                ).otherwise(F.col("tok")),
-            )
-            .withColumn("pos", F.row_number().over(w_doc) - 1)
-            .select("doc_id", "pos", "tok")
-        ).localCheckpoint(eager=True)
         # round r-1's token table is dead once round r's is
         # materialized (O9 discipline, ownership-scoped release)
         cycler.cycle(tok)
@@ -1146,42 +1149,12 @@ def bpe_apply(
     ranked = iter(merges)
 
     def _merge(tok: DataFrame) -> DataFrame:
-        """Splice the next merge in rank order."""
+        """Splice the next merge in rank order: fixed_point calls this
+        exactly max_steps = len(merges) times, in order, so call i
+        splices merges[i]."""
         left, right = next(ranked)
         pairs = tok.withColumn("nxt", F.lead("tok").over(w_doc))
-        matches = (
-            pairs.where((F.col("tok") == left) & (F.col("nxt") == right))
-            .withColumn("grp", F.col("pos") - F.row_number().over(w_doc))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("doc_id", "grp").orderBy("pos")
-                ),
-            )
-            .where(F.col("rn") % 2 == 1)
-            .select("doc_id", F.col("pos").alias("mpos"))
-        )
-        return (
-            tok.join(
-                matches.selectExpr("doc_id", "mpos as pos", "1 as _merge"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .join(
-                matches.selectExpr("doc_id", "mpos + 1 as pos", "1 as _drop"),
-                ["doc_id", "pos"],
-                "left",
-            )
-            .where(F.col("_drop").isNull())
-            .withColumn(
-                "tok",
-                F.when(
-                    F.col("_merge") == 1, F.concat(F.col("tok"), F.lit(right))
-                ).otherwise(F.col("tok")),
-            )
-            .withColumn("pos", F.row_number().over(w_doc) - 1)
-            .select("doc_id", "pos", "tok")
-        )
+        return _bpe_splice(tok, pairs, left, right, w_doc)
 
     tok = fixed_point(tok, _merge, max_steps=len(merges)).state
     after = tok.groupBy("doc_id").agg(

@@ -144,6 +144,7 @@ def _loops(spark):
     return {
         "ccf_window": lambda: connected_components(e()).mapping,
         "star": lambda: connected_components(e(), algorithm="star").mapping,
+        "k_core": lambda: A.k_core(e(), 2),
         "pagerank_int": lambda: A.pagerank_int(e(), iterations=3),
         "label_propagation": lambda: A.label_propagation(e(), rounds=2),
         "personalized_pagerank_int": lambda: A.personalized_pagerank_int(
@@ -172,6 +173,7 @@ def _loops(spark):
 _JOBS = {
     "ccf_window": 4,
     "star": 3,
+    "k_core": 3,
     "pagerank_int": 5,
     "label_propagation": 2,
     "personalized_pagerank_int": 6,
@@ -249,14 +251,12 @@ def test_cc_conf_restored_when_a_step_raises(spark, monkeypatch):
 # loop ported onto ``fixed_point`` leaves it.
 _HAND_ROLLED = {
     ("graph/analytics.py", "_bfs_hops_on"),
-    ("graph/analytics.py", "per_seed_bfs"),
+    ("graph/analytics.py", "_bfs_mask_levels"),
     ("graph/analytics.py", "_per_seed_bfs_rows"),
-    ("graph/analytics.py", "shortest_path_counts"),
     ("graph/analytics.py", "_shortest_path_counts_rows"),
     ("graph/analytics.py", "strongly_connected_components_directed"),
     ("graph/analytics.py", "minimum_spanning_forest"),
     ("graph/analytics.py", "k_truss"),
-    ("graph/analytics.py", "k_core"),
     ("operators/text.py", "bpe_train"),
     ("operators/text.py", "unigram_train"),
     ("queries/graph_queries.py", "cc_streaming_incremental"),
