@@ -1,11 +1,1 @@
-from map_reduce_project_spark.functions.udfs import (
-    en_stopword_ratio_udf,
-    quality_score_pandas,
-    token_count_udf,
-)
-
-__all__ = [
-    "en_stopword_ratio_udf",
-    "quality_score_pandas",
-    "token_count_udf",
-]
+"""Exact-arithmetic helpers, UDAFs and Python UDTFs."""

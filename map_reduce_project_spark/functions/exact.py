@@ -13,7 +13,7 @@ three < 2^53 limbs — every cast exact; C-style signed remainders are
 identical in Spark and DuckDB, and s = h2*P^2 + h1*P + h0 holds for
 signed values — then recombine with one fixed IEEE add that both
 engines execute identically. ``limb_exact_double`` is the Spark
-column; ``limb_sql`` emits the byte-matching DuckDB expression."""
+column; the DuckDB oracles spell the same limbs in SQL."""
 
 from __future__ import annotations
 
@@ -32,12 +32,3 @@ def limb_exact_double(col: Column) -> Column:
     return (
         h2.cast("double") * pd_ * pd_ + h1.cast("double") * pd_
     ) + h0.cast("double")
-
-
-def limb_sql(col: str) -> str:
-    p, pf = LIMB, repr(float(LIMB))
-    r1 = f"(({col} - {col} % {p}) // {p})"
-    h0 = f"CAST({col} % {p} AS DOUBLE)"
-    h1 = f"CAST({r1} % {p} AS DOUBLE)"
-    h2 = f"CAST(({r1} - {r1} % {p}) // {p} AS DOUBLE)"
-    return f"(({h2} * {pf} * {pf} + {h1} * {pf}) + {h0})"

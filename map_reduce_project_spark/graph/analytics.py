@@ -34,10 +34,12 @@ from .checkpointing import (
     _unpersist_rdds,
     checkpoint_rdd_ids,
     fixed_point,
+    release_unread,
 )
 
 # How many Bellman-Ford relaxations the sssp loops chain LAZILY between
-# materialization barriers (eager localCheckpoint + convergence count).
+# materialization barriers (a lazy localCheckpoint forced by the
+# convergence count).
 # 1 reproduces the classic one-barrier-per-round loop bit-for-bit; the
 # batched loop is result-identical for any value because relaxation is
 # monotone and a no-op at the fixed point (argument inline at the loop).
@@ -135,7 +137,9 @@ def bfs_hops(
     seed_rows = seeds.select("node").distinct().withColumn(
         "hop", F.lit(0)
     )
-    return _bfs_hops_on(und, seed_rows, max_hops)
+    out = _bfs_hops_on(und, seed_rows, max_hops)
+    release_unread([und], out)
+    return out
 
 
 def _bfs_hops_on(
@@ -145,7 +149,7 @@ def _bfs_hops_on(
     dst) adjacency — callers that run several sweeps on one graph
     (cc_diameter_estimate's double sweep) build the adjacency once.
     ``seed_rows`` must be (node, hop=0)."""
-    visited = seed_rows.localCheckpoint(eager=True)
+    first = visited = seed_rows.localCheckpoint(eager=True)
     frontier = visited
     cycler = CheckpointCycler(und.sparkSession)
     b = _RELAX_PER_BARRIER
@@ -175,6 +179,7 @@ def _bfs_hops_on(
         cycler.cycle(visited)
         if done:
             break
+    release_unread([first], visited)
     return visited
 
 
@@ -680,11 +685,13 @@ def per_seed_bfs(
         f"filter(sequence(0, {k - 1}), "
         "i -> (shiftright(mask, i) & 1) = 1)"
     )
-    return (
+    out = (
         reached.select("node", "hop", F.explode(set_bits).alias("idx"))
         .join(F.broadcast(seed_idx), "idx")
         .select("seed", "node", "hop")
     )
+    release_unread([und, seed_idx], out)
+    return out
 
 
 def sssp_int(
@@ -787,11 +794,12 @@ def sssp_int(
 
     # Relaxation batching (optimization round 12, guide §1.2 step 1 /
     # §5 caching notes): chain _RELAX_PER_BARRIER relaxations LAZILY
-    # between materialization barriers. Each barrier (eager
-    # localCheckpoint + convergence count) is a full write+read of the
-    # state plus two scheduled jobs; relaxation itself is monotone and
-    # idempotent at the fixed point, so batching changes NOTHING about
-    # the result — only how often the loop pays the barrier. The
+    # between materialization barriers. Each barrier (a lazy
+    # localCheckpoint forced by the convergence count) is a full
+    # write+read of the state plus one scheduled job; relaxation itself
+    # is monotone and idempotent at the fixed point, so batching
+    # changes NOTHING about the result — only how often the loop pays
+    # the barrier. The
     # convergence test reads the LAST chained relaxation's change
     # flag: zero changes there means the previous relaxation already
     # sat at the fixed point. Budget parity: ceil(max_rounds / b)
@@ -897,9 +905,10 @@ def _sssp_fixed_point(
     invariants: tuple[DataFrame, ...],
 ) -> DataFrame:
     """Both sssp loops: ceil(max_rounds / b) barriers of b chained
-    relaxations each, every barrier an eager checkpoint plus a count of
-    the rows flagged ``chg``; the initial ``dist`` checkpoint is freed
-    after the first barrier. Raises when the budget runs out."""
+    relaxations each, every barrier a lazy checkpoint forced by the
+    count of the rows flagged ``chg`` (one job); the initial ``dist``
+    checkpoint is freed after the first barrier. Raises when the budget
+    runs out."""
     b = _RELAX_PER_BARRIER
     res = fixed_point(
         dist,
@@ -908,7 +917,6 @@ def _sssp_fixed_point(
         per_barrier=b,
         carry=lambda df: df.select(*cols),
         measure=_changed_rows("chg"),
-        eager=True,
         own_state=True,
         invariants=invariants,
     )
@@ -981,6 +989,7 @@ def _bfs_mask_levels(
         # every level's mask DataFrame is part of the RESULT — only
         # the merged visited mask is loop-scratch the cycler may free
         cycler.cycle(visited)
+    release_unread([visited, frontier], *levels)
     return levels
 
 
@@ -996,6 +1005,7 @@ def _per_seed_bfs_rows(
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop"))
     ).localCheckpoint(eager=True)
     visited = frontier
+    owned = [und, frontier]
     cycler = CheckpointCycler(edges.sparkSession)
     for h in range(1, max_hops + 1):
         frontier = (
@@ -1005,10 +1015,12 @@ def _per_seed_bfs_rows(
             .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
             .withColumn("hop", F.lit(h))
         ).localCheckpoint(eager=True)
+        owned.append(frontier)
         if not frontier.take(1):
             break
         visited = visited.unionAll(frontier).localCheckpoint(eager=True)
         cycler.cycle(frontier, visited)
+    release_unread(owned, visited)
     return visited
 
 
@@ -1270,7 +1282,9 @@ def k_truss(
             "raise max_rounds (peeling cascades can be long on chains "
             "of dependent triangles)"
         )
-    return kept.select("src", "dst", "support")
+    out = kept.select("src", "dst", "support")
+    release_unread([oriented], out)
+    return out
 
 
 def shortest_path_counts(
@@ -1361,7 +1375,7 @@ def shortest_path_counts(
             break
         per_level.append(cnt)
         # per-level count tables are RESULT pieces; nothing to cycle
-        # (the masks are result-owned and stay live)
+        # (the masks stay live until the loop ends)
     out = None
     for t, lvl in enumerate(per_level):
         rows = (
@@ -1372,10 +1386,11 @@ def shortest_path_counts(
             .withColumn("hop", F.lit(t).cast("long"))
         )
         out = rows if out is None else out.unionAll(rows)
-    return (
-        out.join(F.broadcast(seed_idx), "idx")
-        .select("seed", "node", "hop", F.col("n_paths").cast("long").alias("n_paths"))
+    out = out.join(F.broadcast(seed_idx), "idx").select(
+        "seed", "node", "hop", F.col("n_paths").cast("long").alias("n_paths")
     )
+    release_unread([und, seed_idx, cnt, *masks], out)
+    return out
 
 
 def _shortest_path_counts_rows(
@@ -1384,7 +1399,8 @@ def _shortest_path_counts_rows(
     """(seed, node)-keyed sigma DP — the general-k path (and the
     property-pin oracle for the array batch above)."""
     und = _node_adjacency(edges)
-    dist = per_seed_bfs(edges, seeds, max_hops).localCheckpoint(eager=True)
+    bfs = per_seed_bfs(edges, seeds, max_hops)
+    dist = bfs.localCheckpoint(eager=True)
 
     level = (
         dist.where(F.col("hop") == 0)
@@ -1392,6 +1408,7 @@ def _shortest_path_counts_rows(
         .withColumn("n_paths", F.lit(1).cast("long"))
     ).localCheckpoint(eager=True)
     out = level.withColumn("hop", F.lit(0).cast("long"))
+    owned = [und, bfs, dist, level]
     cycler = CheckpointCycler(edges.sparkSession)
     for t in range(1, max_hops + 1):
         nxt_nodes = dist.where(F.col("hop") == t).select("seed", "node")
@@ -1402,15 +1419,18 @@ def _shortest_path_counts_rows(
             .groupBy("seed", "node")
             .agg(F.sum("n_paths").cast("long").alias("n_paths"))
         ).localCheckpoint(eager=True)
+        owned.append(level)
         if not level.take(1):
             break
         out = out.unionAll(
             level.withColumn("hop", F.lit(t).cast("long"))
         ).localCheckpoint(eager=True)
         # previous level + previous accumulated union are dead; dist
-        # stays live (never claimed by the cycler)
+        # stays live until the loop ends (never claimed by the cycler)
         cycler.cycle(level, out)
-    return out.select("seed", "node", "hop", "n_paths")
+    out = out.select("seed", "node", "hop", "n_paths")
+    release_unread(owned, out)
+    return out
 
 
 def pagerank_weighted_int(

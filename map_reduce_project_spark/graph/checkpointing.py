@@ -14,7 +14,7 @@ checkpoint:
   reference's ``cache()+count()`` protocol runs two,
   ccf_connected_components.py:219-221);
 - an EAGER ``localCheckpoint`` when the loop has no measure (a fixed
-  number of steps) or pins its state before measuring it;
+  number of steps);
 - a RELIABLE barrier when ``reliable_dir`` is set: a parquet write +
   readback under ``<dir>/iter-NNNN``. A ``localCheckpoint`` pins blocks
   on executors, and losing ANY executor mid-loop kills the job because
@@ -49,7 +49,8 @@ generation's directory through ``hadoop_delete``. The final generation
 backs the result and is never freed (a reliable one is the caller's to
 remove after collecting). Loop-invariant checkpoints the caller made
 for the loop (``invariants``) are freed when it ends, except those the
-result still reads.
+result still reads — ``release_unread``, the end-of-loop rule the
+hand-run loops below apply too.
 
 Ownership model: ``cycle(df, ...)`` takes the round's checkpointed
 DataFrame(s) and claims exactly the RDD ids that back them (the
@@ -69,7 +70,7 @@ advancing (a loop that may return the PREVIOUS round keeps its cycle()
 call inside the advance branch). Loops of shapes ``fixed_point`` does
 not cover (multi-state frontier/visited loops, k-truss's per-round
 scratch checkpoint, the trainers, the streaming fold) still drive a
-cycler by hand.
+cycler by hand, and end with ``release_unread`` like ``fixed_point``.
 """
 
 from __future__ import annotations
@@ -77,7 +78,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
-from typing import Callable, Sequence
+from typing import Callable, Iterable, Sequence
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -155,6 +156,22 @@ def _unpersist_rdds(spark: SparkSession, ids: set[int]) -> None:
                 rdd.unpersist(False)
             except Exception:  # pragma: no cover - cleaner race
                 pass
+
+
+def release_unread(owned: Iterable[DataFrame], *results: DataFrame) -> None:
+    """Free the checkpoints behind ``owned`` that no ``results`` plan
+    reads: the end-of-loop rule. A loop's scratch generations and
+    loop-invariant tables are dead once its result is built, except
+    the ``LogicalRDD`` leaves the result still scans (a localCheckpoint
+    cannot be recomputed, so those stay for the ContextCleaner).
+    ``owned`` holds only checkpoints the loop made itself, or lazy
+    frames over them; ids already freed are skipped."""
+    owned = list(owned)
+    ids = set().union(*map(checkpoint_rdd_ids, owned))
+    for df in results:
+        ids -= _rdd_leaf_ids(df)
+    if ids:
+        _unpersist_rdds(owned[0].sparkSession, ids)
 
 
 class CheckpointCycler:
@@ -238,7 +255,6 @@ def fixed_point(
     carry: Callable[[DataFrame], DataFrame] | None = None,
     measure: Callable[[DataFrame], dict] | None = None,
     until: Callable[[dict, dict | None], bool] | None = None,
-    eager: bool | None = None,
     reliable_dir: str | None = None,
     own_state: bool = False,
     invariants: Sequence[DataFrame] = (),
@@ -252,19 +268,18 @@ def fixed_point(
     change flag that only the measure reads. ``measure(frame)`` runs on
     the materialized frame and returns named figures; the loop stops
     when ``until(figures, previous figures)`` holds — by default when
-    every figure is 0. ``eager`` defaults to "no measure".
-    ``own_state`` lets the release rule free a checkpointed initial
-    state after the first barrier; ``invariants`` (the caller's
-    loop-invariant checkpoints) are freed at the end unless the final
-    state reads them. ``on_iteration`` gets ``{iteration, wall_sec,
-    **figures}`` per barrier, plus ``checkpoint_dir`` and ``ckpt_mb``
-    in reliable mode; exceptions propagate.
+    every figure is 0. The checkpoint is eager only when there is no
+    measure to force it. ``own_state`` lets the release rule free a
+    checkpointed initial state after the first barrier; ``invariants``
+    (the caller's loop-invariant checkpoints) are freed at the end
+    unless the final state reads them. ``on_iteration`` gets
+    ``{iteration, wall_sec, **figures}`` per barrier, plus
+    ``checkpoint_dir`` and ``ckpt_mb`` in reliable mode; exceptions
+    propagate.
     """
     spark = state.sparkSession
     carry = carry or (lambda df: df)
     until = until or (lambda figures, _prev: not any(figures.values()))
-    if eager is None:
-        eager = measure is None
     cycler = CheckpointCycler(spark)
     if own_state:
         cycler.cycle(state)
@@ -277,7 +292,7 @@ def fixed_point(
             frame = step(carry(frame))
         done += take
         if reliable_dir is None:
-            frame = frame.localCheckpoint(eager=eager)
+            frame = frame.localCheckpoint(eager=measure is None)
         else:
             it_dir = f"{reliable_dir}/iter-{done:04d}"
             frame.write.mode("overwrite").parquet(it_dir)
@@ -307,7 +322,5 @@ def fixed_point(
         if measure is not None:
             converged = until(figures, measures[-1] if measures else None)
             measures.append(figures)
-    if invariants:
-        owned = set().union(*map(checkpoint_rdd_ids, invariants))
-        _unpersist_rdds(spark, owned - _rdd_leaf_ids(state))
+    release_unread(invariants, state)
     return FixedPoint(state, done, converged, measures)

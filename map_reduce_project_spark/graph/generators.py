@@ -159,14 +159,6 @@ def edges_df(
 # --- distributed variants (scale path; not RNG-conformant) -----------------
 
 
-def chain_graph_df(spark: SparkSession, n: int) -> DataFrame:
-    """Distributed chain: spark.range, no driver materialization."""
-    return spark.range(n - 1).select(
-        F.col("id").cast("string").alias("src"),
-        (F.col("id") + 1).cast("string").alias("dst"),
-    )
-
-
 def random_graph_df(
     spark: SparkSession, n_nodes: int, n_edges: int, seed: int = 42
 ) -> DataFrame:

@@ -657,76 +657,6 @@ def _best_index_match(
     )
 
 
-def write_signature_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    k: int = 3,
-) -> None:
-    """Persist the dedup index so later batches never re-shingle the
-    corpus — the storage half of the incremental-dedup contract
-    (``incremental_dedup``'s docstring describes it; this implements
-    it). Layout under ``path``:
-
-    - ``bands/`` — (id, band_hash) partitioned by ``band_idx``: the
-      LSH bucket table. Partitioning by band index means a batch
-      probe prunes to the band directories it actually joins.
-    - ``docs/`` — (id, sset): per-doc distinct shingle sets for the
-      exact-Jaccard verify stage.
-
-    The corpus is shingled ONCE (single lazy checkpoint feeds both
-    writes). Appending a new snapshot = writing its rows to both
-    tables; no existing data is rewritten.
-    """
-    per_doc = _per_doc_signature_table(
-        docs, id_col, text_col, num_hashes, k
-    ).localCheckpoint(eager=False)
-    bands_df = lsh_buckets(
-        per_doc, id_col=id_col, num_hashes=num_hashes, bands=bands
-    ).select(F.col(id_col), "band_idx", "band_hash")
-    bands_df.write.mode("overwrite").partitionBy("band_idx").parquet(
-        f"{path}/bands"
-    )
-    per_doc.select(F.col(id_col), "sset").write.mode("overwrite").parquet(
-        f"{path}/docs"
-    )
-
-
-def dedup_against_signature_index(
-    spark,
-    path: str,
-    batch_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """``incremental_dedup`` with the index side read from a
-    ``write_signature_index`` layout: only the batch is shingled;
-    the index contributes a columnar scan of its bucket table (band
-    partition pruning applies) and its shingle sets. Same output
-    contract: one (id, dup_of, jaccard) row per flagged batch doc.
-    ``num_hashes``/``bands``/``k`` must match the values the index
-    was written with."""
-    batch = _per_doc_signature_table(
-        batch_docs, id_col, text_col, num_hashes, k
-    ).localCheckpoint(eager=False)
-    index_bands = spark.read.parquet(f"{path}/bands").select(
-        F.col(id_col).alias("id_i"), "band_idx", "band_hash"
-    )
-    index_sets = spark.read.parquet(f"{path}/docs").select(
-        F.col(id_col).alias("id_i"), F.col("sset").alias("set_i")
-    )
-    return _best_index_match(
-        batch, index_bands, index_sets, id_col, num_hashes, bands, threshold
-    )
-
-
 def ngram_contamination(
     train_docs: DataFrame,
     eval_docs: DataFrame,

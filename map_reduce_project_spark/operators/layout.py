@@ -59,8 +59,7 @@ def zorder_layout(
     the Morton code, then sort within partitions by it. Each output
     partition (→ parquet file) then covers a compact hyper-rectangle
     in the column space, so footer min/max stats prune on every
-    clustered column. Write with ``sources.io.write_parquet`` to
-    materialize the layout.
+    clustered column. Write it as parquet to materialize the layout.
     """
     coded = df.withColumn("_zcode", zorder_code(cols, bits))
     parts = (
@@ -133,22 +132,3 @@ def with_hilbert_code(
             .withColumnRenamed("_hy2", "_hy")
         )
     return df.drop("_hx", "_hy", "_rx", "_ry")
-
-
-def hilbert_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 8,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Cluster ``df`` along the Hilbert curve of two bucket-ordinal
-    columns: range-partition by the code, sort within partitions.
-    Same contract as ``zorder_layout`` with the continuous curve."""
-    coded = with_hilbert_code(df, x_col, y_col, bits)
-    parts = (
-        coded.repartitionByRange(n_partitions, "_hcode")
-        if n_partitions
-        else coded.repartitionByRange("_hcode")
-    )
-    return parts.sortWithinPartitions("_hcode").drop("_hcode")

@@ -3240,28 +3240,6 @@ def _parse_mp4(b: bytes) -> dict:
 _HEADER_DECODERS["video/mp4"] = _parse_mp4
 
 
-def minimal_mp4(doc_id: int) -> tuple[str, bytes]:
-    """Deterministic minimal MP4: ftyp + moov/trak/tkhd (version 0)
-    declaring w = 64 + 16*(id%8), h = 48 + 16*((id//8)%6) in 16.16
-    fixed point. Container-metadata fixture (no media data)."""
-    w = 64 + 16 * (doc_id % 8)
-    h = 48 + 16 * ((doc_id // 8) % 6)
-
-    def box(tag: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + tag + payload
-
-    tkhd = box(
-        b"tkhd",
-        b"\x00" + b"\x00\x00\x07"  # version 0, flags
-        + b"\x00" * 20  # creation/modification/track_ID/reserved/duration
-        + b"\x00" * 52  # reserved/layer/group/volume/reserved/matrix
-        + struct.pack(">II", w << 16, h << 16),
-    )
-    moov = box(b"moov", box(b"trak", tkhd))
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
-    return "video/mp4", ftyp + moov
-
-
 # --- Full-AC tier: zigzag + run/size entropy decode + a DEFINED
 # fixed-point integer IDCT. T.81 permits IDCT implementation variance
 # (that's why libjpeg ships three); this decoder's transform is the
@@ -4125,21 +4103,6 @@ class _FlacSubframeWriter:
                 for _ in range(n_res):
                     _put_rice(bw, samp[t] - predict(t), kp)
                     t += 1
-
-
-def encode_flac_mono_subframe(kind: str, samp: list, **kw) -> bytes:
-    """One-frame mono FLAC around an arbitrary subframe kind
-    ('verbatim' | 'lpc') — the fixture harness for the decoder's
-    remaining subframe types."""
-    assert len(samp) == 256
-
-    def body(wr: _FlacSubframeWriter) -> None:
-        if kind == "verbatim":
-            wr.verbatim(samp, 16)
-        else:
-            wr.lpc(samp, bps=16, **kw)
-
-    return _flac_stream(1, 256, [_flac_frame(0, 0b0000, body)])
 
 
 def encode_flac_lpc_multipart(

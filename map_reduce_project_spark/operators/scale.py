@@ -14,14 +14,15 @@ These are the manual levers for the cases AQE can't fix alone:
   reducers instead of one. AQE's skew-join split handles sort-merge
   skew automatically; this is for the cases AQE can't split (e.g.
   aggregations stacked on the join key downstream).
-- ``write_bucketed`` / ``read_bucketed``: hash-bucketed tables make
-  equi-joins and aggregations on the bucket key shuffle-free — the
-  100 TB answer to "this join runs every hour on the same key".
+- ``write_bucketed``: hash-bucketed tables make equi-joins and
+  aggregations on the bucket key shuffle-free — the 100 TB answer to
+  "this join runs every hour on the same key" (read them back with
+  ``spark.table``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -143,75 +144,6 @@ def bloom_prune_join(
     return pruned.join(small, key, how)
 
 
-def zorder_key(cols: list[str], bits: int = 16):
-    """Morton (Z-order) interleaved-bit key over non-negative integer
-    columns already scaled into [0, 2^bits).
-
-    Sorting/range-partitioning by this key clusters rows that are close
-    in EVERY dimension into the same files, so each file's per-column
-    min/max ranges are narrow and parquet row-group / file skipping
-    prunes multi-dimensional predicates — the standard data-layout
-    lever (Delta/Iceberg OPTIMIZE ZORDER) expressed as a plain column.
-    Pure bit arithmetic: shiftright/AND/shiftleft fold entirely inside
-    whole-stage codegen.
-    """
-    ndim = len(cols)
-    expr = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(cols):
-            bit = F.shiftright(F.col(c).cast("long"), i).bitwiseAND(
-                F.lit(1)
-            )
-            expr = expr + F.shiftleft(bit, i * ndim + j)
-    return expr
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet clustered by the Z-order of ``cols``:
-    range-partition on the interleaved key (equal-size files via
-    sampled range bounds), sort within partitions, one file per
-    partition. Readers filtering on ANY of ``cols`` then skip whole
-    files/row-groups on min/max stats instead of scanning everything —
-    at 100 TB this is the difference between reading a few files and
-    reading the lake. tests/test_scale_ops.py pins the locality (per-
-    file key ranges shrink vs an unordered layout)."""
-    # Rescale every dim to the full [0, 2^bits) range first: Morton
-    # interleaving assumes comparable per-dim magnitudes — a 100-value
-    # dim next to a 100k-value dim would contribute nothing to the
-    # leading key bits and get no clustering. One tiny min/max agg.
-    bounds = df.agg(
-        *[F.min(c).cast("double").alias(f"_min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"_max_{c}") for c in cols],
-    ).collect()[0]
-    top = float((1 << bits) - 1)
-    scaled = df
-    for c in cols:
-        lo, hi = bounds[f"_min_{c}"], bounds[f"_max_{c}"]
-        span = (hi - lo) or 1.0
-        scaled = scaled.withColumn(
-            f"_z_{c}",
-            F.floor((F.col(c).cast("double") - lo) * (top / span)).cast(
-                "long"
-            ),
-        )
-    keyed = scaled.withColumn(
-        "_zkey", zorder_key([f"_z_{c}" for c in cols], bits)
-    ).drop(*[f"_z_{c}" for c in cols])
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -229,7 +161,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

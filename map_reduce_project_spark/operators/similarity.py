@@ -553,8 +553,7 @@ def write_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Persist the pinned-quantizer inverted file so queries never
-    re-assign the corpus (the ANN counterpart of
-    dedup.write_signature_index). Layout under ``path``:
+    re-assign the corpus. Layout under ``path``:
 
     - ``cells/`` — (target_id, pos, val) element posting lists
       partitioned by ``cell``: a probe reads only its cells'

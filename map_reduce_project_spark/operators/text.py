@@ -726,9 +726,8 @@ def bow_cosine_pairs(
     )
 
 
-# Hashed linear classifier: bucket count and pinned weight hash for
-# engine-portable inference (Knuth multiplicative constant).
-QC_BUCKETS = 256
+# Hashed linear classifier: pinned weight hash for engine-portable
+# inference (Knuth multiplicative constant).
 QC_MULT = 2654435761
 QC_RANGE = 1000
 
@@ -768,70 +767,6 @@ def hashed_linear_score(
             (F.col("score") > 0).alias("quality_label"),
         )
     )
-
-
-def hashed_features(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, features vector): the QC_BUCKETS-dim bag-of-hashed-tokens
-    count vector behind ``hashed_linear_score`` — built entirely from
-    JVM expressions (explode -> bucket count -> map -> dense array ->
-    ``array_to_vector``), so featurization scales like any other
-    aggregate. Feed to spark.ml estimators."""
-    from pyspark.ml.functions import array_to_vector
-    from map_reduce_project_spark.operators.dedup import tokens_col
-
-    tok = docs.select(
-        F.col(id_col), F.explode(tokens_col(text_col)).alias("token")
-    )
-    bucket = F.conv(F.substring(F.md5("token"), 1, 2), 16, 10).cast("int")
-    counts = (
-        tok.select(F.col(id_col), bucket.alias("bucket"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count("*").cast("double").alias("cnt"))
-    )
-    dense = (
-        counts.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("bucket", "cnt"))
-            ).alias("m")
-        )
-        .select(
-            F.col(id_col),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(QC_BUCKETS - 1)),
-                lambda b: F.coalesce(
-                    F.element_at("m", b.cast("int")), F.lit(0.0)
-                ),
-            ).alias("arr"),
-        )
-    )
-    return dense.select(id_col, array_to_vector("arr").alias("features"))
-
-
-def train_quality_classifier(
-    labeled_docs: DataFrame,
-    label_col: str = "label",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Fit spark.ml LogisticRegression on the hashed features — the
-    production counterpart of ``hashed_linear_score``'s pinned
-    weights. Returns the fitted model; score new corpora with
-    ``model.transform(hashed_features(docs))``. The featurization
-    plan is identical between training and inference, so promoting
-    learned weights never changes the pipeline shape."""
-    from pyspark.ml.classification import LogisticRegression
-
-    feats = hashed_features(labeled_docs, id_col, text_col)
-    train = feats.join(
-        labeled_docs.select(id_col, label_col), id_col
-    )
-    lr = LogisticRegression(
-        featuresCol="features", labelCol=label_col, regParam=0.01
-    )
-    return lr.fit(train)
 
 
 GOPHER_MUST_HAVE = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -1081,6 +1016,7 @@ def bpe_train(
 
     from map_reduce_project_spark.graph.checkpointing import (
         CheckpointCycler,
+        release_unread,
     )
 
     spark = docs.sparkSession
@@ -1115,11 +1051,14 @@ def bpe_train(
         # materialized (O9 discipline, ownership-scoped release)
         cycler.cycle(tok)
 
-    return spark.createDataFrame(
+    out = spark.createDataFrame(
         merges,
         "merge_rank long, lhs string, rhs string, merged string, "
         "pair_count long",
     )
+    if merges:  # the last round's token table: read by nothing now
+        release_unread([tok], out)
+    return out
 
 
 def bpe_apply(

@@ -1,23 +1,19 @@
 from map_reduce_project_spark.sources.io import (
     TABLES,
-    load_tables,
     read_csv,
     read_json,
     read_table,
     register_views,
     write_csv,
     write_json,
-    write_parquet,
 )
 
 __all__ = [
     "TABLES",
-    "load_tables",
     "read_csv",
     "read_json",
     "read_table",
     "register_views",
     "write_csv",
     "write_json",
-    "write_parquet",
 ]

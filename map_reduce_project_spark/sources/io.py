@@ -75,10 +75,6 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the SQL surface."""
     for name in TABLES:
@@ -109,56 +105,12 @@ def read_json(
     return reader.json(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Parquet sink; ``partition_by`` produces hive-style directory
-    partitioning, the unit of partition pruning for downstream scans
-    (prune-able predicates on the partition columns never touch the
-    skipped files)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    modality: str = "application/octet-stream",
-) -> DataFrame:
-    """Raw media ingest via Spark's binaryFile source: one row per
-    file, (path, modality, payload, n_bytes). The object-storage
-    ingest path for images/audio/video — files become partition-local
-    binary rows (no driver transfer), ready for the mapInPandas
-    decode/resize/frame-sample stages in operators.multimodal.
-    ``spark.sql.files.maxPartitionBytes`` governs packing of small
-    files into partitions at scale.
-    """
-    from pyspark.sql import functions as F
-
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    return df.select(
-        "path",
-        F.lit(modality).alias("modality"),
-        F.col("content").alias("payload"),
-        F.col("length").alias("n_bytes"),
-    )
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -169,28 +121,3 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw text ingest: one row per line, column ``value`` — the entry
-    point for log/corpus files before text-analysis operators."""
-    return spark.read.text(path)
-
-
-def read_xml(
-    spark: SparkSession, path: str, row_tag: str, schema: str | None = None
-) -> DataFrame:
-    """XML source (built into Spark 4): one row per ``row_tag``
-    element. Schema inference scans the data twice — pass an explicit
-    schema in production so ingestion is single-pass and type-stable."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def write_xml(
-    df: DataFrame, path: str, row_tag: str, mode: str = "overwrite"
-) -> None:
-    """XML sink (built into Spark 4), one ``row_tag`` element per row."""
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).save(path)

@@ -46,24 +46,14 @@ _LCG_C = 12345
 _LCG_M = 1 << 31
 
 
-def telemetry_row(row_id: int) -> tuple[int, int, str, int]:
-    x1 = (row_id * _LCG_A + _LCG_C) % _LCG_M
-    x2 = (x1 * _LCG_A + _LCG_C) % _LCG_M
-    return (
-        row_id,
-        x1 % 1000,                       # device
-        _METRICS[(x1 // 1000) % 4],      # metric
-        x2 % 10_000,                     # reading
-    )
-
-
 def telemetry_batches(start: int, end: int, chunk: int = 65536):
     """Arrow RecordBatches for row ids [start, end) — the Spark-4
     Python DataSource fast path (optimization round 12, guide §4.2):
     ``read()`` may yield ``pyarrow.RecordBatch`` objects instead of
     tuples, skipping the per-row pickle of the tuple protocol. The
-    LCG is numpy-vectorized; ``telemetry_row`` stays as the scalar
-    conformance oracle (bit-equality property-pinned in tests).
+    LCG is numpy-vectorized; the tests keep a scalar twin
+    (``telemetry_row``) as the conformance oracle (bit-equality
+    property-pinned).
 
     int64 safety: row_id * _LCG_A <= 2^31 * ~2^30 < 2^62 for
     row_id < _LCG_M — the same bound the module docstring pins for
@@ -110,7 +100,7 @@ class _TelemetryReader(DataSourceReader):
         ]
 
     def read(self, partition: _RangePartition) -> Iterator:
-        # Arrow-batch yield (round 12): same rows as telemetry_row,
+        # Arrow-batch yield (round 12): one LCG row per id,
         # vectorized — see telemetry_batches
         yield from telemetry_batches(partition.start, partition.end)
 
@@ -239,7 +229,7 @@ class _TelemetryStreamReader(DataSourceStreamReader):
         ] or [_RangePartition(lo, hi)]
 
     def read(self, partition: _RangePartition) -> Iterator:
-        # Arrow-batch yield (round 12): same rows as telemetry_row,
+        # Arrow-batch yield (round 12): one LCG row per id,
         # vectorized — see telemetry_batches
         yield from telemetry_batches(partition.start, partition.end)
 

@@ -221,64 +221,6 @@ def stream_events_with_horizon_sentinel(
     return _normalize_event_ts(stream)
 
 
-def stream_events_time_sliced(
-    spark: SparkSession,
-    sf_dir: str,
-    n_slices: int = 4,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """events.parquet re-cut into ``n_slices`` TIME-ORDERED parquet
-    files with strictly increasing mtimes, streamed one file per
-    micro-batch — the multi-micro-batch parity harness (round-12).
-
-    The single-file gate streams process everything in ONE micro-batch,
-    which exercises the stateful operators but not the cross-batch
-    state-merge path a production stream lives on (watermark advancing
-    between batches, session state carried and merged across commits).
-    Slicing on the global ts order keeps every batch's rows at-or-after
-    the previous batch's maximum, so the advancing watermark never
-    drops a row and the availableNow final state must EXACTLY equal the
-    batch result — any divergence is a state-merge bug, not late data.
-
-    The global-order ntile is a single-partition window — fine for a
-    test/probe harness (this function is not a production path; at
-    scale you'd range-partition on ts instead).
-    """
-    import glob as _glob
-    import shutil as _shutil
-
-    from pyspark.sql.window import Window
-
-    from map_reduce_project_spark.sources.io import _normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    d = _scratch_dir("ev_sliced_")
-    sliced = raw.withColumn(
-        "_slice",
-        F.ntile(n_slices).over(Window.orderBy("ts", "event_id")),
-    )
-    now = time.time()
-    for i in range(1, n_slices + 1):
-        tmp_out = tempfile.mkdtemp(prefix="ev_sliced_part_")
-        sliced.where(F.col("_slice") == i).drop("_slice").coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp_out)
-        (part,) = _glob.glob(os.path.join(tmp_out, "part-*.parquet"))
-        dst = os.path.join(d, f"slice_{i:02d}.parquet")
-        _shutil.move(part, dst)
-        _shutil.rmtree(tmp_out, ignore_errors=True)
-        os.utime(dst, (now + i, now + i))
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(d)
-    )
-    return _normalize_event_ts(stream)
-
-
 def run_stream_to_memory(
     streaming_df: DataFrame,
     query_name: str | None = None,

@@ -13,9 +13,9 @@ from map_reduce_project_spark.graph import (
     generate_random_graph,
 )
 from map_reduce_project_spark.graph.generators import (
-    chain_graph_df,
     random_graph_df,
 )
+from support import chain_graph_df
 
 
 def test_chain_shape():

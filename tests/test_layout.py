@@ -22,7 +22,7 @@ def test_zorder_code_goldens(spark):
 def test_zorder_code_is_codegen_arithmetic(spark):
     # the interleave must stay inside whole-stage codegen: no
     # python UDF / BatchEvalPython in the plan
-    from map_reduce_project_spark.plans.inspect import formatted_plan
+    from plan_inspect import formatted_plan
 
     df = spark.range(100).select(
         (F.col("id") % 10).alias("x"), (F.col("id") % 7).alias("y")
@@ -146,46 +146,3 @@ def test_hilbert_curve_is_continuous_unlike_zorder(spark):
         > 1
     )
     assert jumps > 0  # the Z-curve jumps; Hilbert never does
-
-
-def test_hilbert_layout_prunes_on_both_columns(spark, tmp_path):
-    # same pruning contract as the zorder layout test: after
-    # clustering on the Hilbert code, every file's min/max box is
-    # narrow on BOTH clustered columns
-    from pyspark.sql import functions as F
-
-    from map_reduce_project_spark.operators.layout import hilbert_layout
-
-    side = 256
-    df = spark.range(side * side).select(
-        (F.col("id") % side).alias("x"),
-        (F.col("id") / side).cast("long").alias("y"),
-        F.col("id").alias("payload"),
-    )
-    out = str(tmp_path / "hil")
-    hilbert_layout(df, "x", "y", bits=8, n_partitions=16).write.mode(
-        "overwrite"
-    ).parquet(out)
-    import pyarrow.parquet as pq
-    import glob as _glob
-
-    spans_x, spans_y = [], []
-    for f in _glob.glob(f"{out}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            cols = {
-                md.row_group(rg).column(i).path_in_schema: md.row_group(
-                    rg
-                ).column(i).statistics
-                for i in range(md.row_group(rg).num_columns)
-            }
-            spans_x.append(cols["x"].max - cols["x"].min)
-            spans_y.append(cols["y"].max - cols["y"].min)
-    # each of the 16 partitions holds 1/16 of the curve; a connected
-    # Hilbert segment of 4096 cells fits in a ~64x64 box (plus curve
-    # slack) — far narrower than the 255 full-range an unsorted axis
-    # would show
-    assert max(spans_x) <= 128 and max(spans_y) <= 128, (
-        max(spans_x),
-        max(spans_y),
-    )

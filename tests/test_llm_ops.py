@@ -394,29 +394,6 @@ def test_decode_media_stub_gates_real_modalities():
         decode_media(b"\x89PNG", "image/png")  # truncated header
 
 
-def test_mllib_minhash_lsh_finds_duplicates(spark, docs):
-    from map_reduce_project_spark.operators.mllib_lsh import minhash_lsh_pairs
-
-    pairs = {
-        (r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    assert (1, 2) in pairs  # exact duplicates always survive
-    assert not any({a, b} == {4, 5} for a, b in pairs)
-
-
-def test_mllib_brp_lsh_recall(spark, vectors):
-    from map_reduce_project_spark.operators.mllib_lsh import brp_lsh_neighbors
-
-    out = brp_lsh_neighbors(
-        vectors, vectors.where("vec_id = 0"), k=2, num_hash_tables=8
-    ).collect()
-    ranked = [r.target_id for r in sorted(out, key=lambda r: r.rank)]
-    # nearest euclidean neighbors of [1,0,0,0]: the identical vector 4,
-    # then vector 1
-    assert ranked[0] == 4
-    assert ranked[1] == 1
-
-
 def test_ivf_exhaustive_probe_matches_brute_force(spark, vectors):
     # probing every cell degenerates IVF to exact search: the top-k
     # (query, target) sets must equal brute force (cosines are computed
@@ -543,25 +520,6 @@ def test_sample_frames_fanout_matches_python(spark, docs):
         ).collect()
     }
     assert got == expected
-
-
-def test_read_binary_files(spark, tmp_path):
-    from map_reduce_project_spark.sources.io import read_binary_files
-
-    (tmp_path / "a.bin").write_bytes(b"\x01\x02\x03")
-    (tmp_path / "b.bin").write_bytes(b"\xff" * 10)
-    (tmp_path / "skip.txt").write_bytes(b"nope")
-    df = read_binary_files(
-        spark, str(tmp_path), glob="*.bin", modality="fake/image"
-    )
-    got = {
-        (r.path.rsplit("/", 1)[-1], bytes(r.payload), r.n_bytes, r.modality)
-        for r in df.collect()
-    }
-    assert got == {
-        ("a.bin", b"\x01\x02\x03", 3, "fake/image"),
-        ("b.bin", b"\xff" * 10, 10, "fake/image"),
-    }
 
 
 def test_scrub_pii(spark):
@@ -880,37 +838,6 @@ def test_bow_cosine_df_pruning_drops_stopword_candidates(spark):
     assert pairs == {(1, 2)}
 
 
-def test_persisted_signature_index_matches_in_plan(spark, docs, tmp_path):
-    """write_signature_index + dedup_against_signature_index must emit
-    exactly what the in-plan incremental_dedup emits — the persisted
-    index is the same computation with the corpus shingled once at
-    write time instead of per batch."""
-    from map_reduce_project_spark.operators.dedup import (
-        dedup_against_signature_index,
-        incremental_dedup,
-        write_signature_index,
-    )
-
-    index_docs = docs.where(F.col("doc_id").isin(1, 4))
-    batch = docs.where(F.col("doc_id").isin(2, 3, 5))
-    want = {
-        (r.doc_id, r.dup_of, r.jaccard)
-        for r in incremental_dedup(index_docs, batch, threshold=0.3).collect()
-    }
-    path = str(tmp_path / "sig_index")
-    write_signature_index(index_docs, path)
-    got = {
-        (r.doc_id, r.dup_of, r.jaccard)
-        for r in dedup_against_signature_index(
-            spark, path, batch, threshold=0.3
-        ).collect()
-    }
-    assert got == want and got
-    # the layout is the documented one: band-partitioned buckets
-    import os
-    assert any(d.startswith("band_idx=") for d in os.listdir(f"{path}/bands"))
-
-
 def test_persisted_ivf_index_matches_in_plan(spark, sf0001, tmp_path):
     from map_reduce_project_spark.operators.similarity import (
         ivf_index_topk,
@@ -1068,39 +995,6 @@ def test_kmeans_int_converges_to_separated_clusters(spark):
     assert len(out) == 10
     assert {clusters[i] for i in range(0, 10, 2)} == {0}
     assert {clusters[i] for i in range(1, 11, 2)} == {1}
-
-
-def test_trained_classifier_recovers_hashed_weight_labels(spark):
-    """spark.ml LogisticRegression on the hashed features must learn
-    to reproduce labels GENERATED by the pinned-weight scorer — the
-    train-then-promote path of the quality-classifier story."""
-    from map_reduce_project_spark.operators.text import (
-        hashed_features,
-        hashed_linear_score,
-        train_quality_classifier,
-    )
-
-    words = [f"w{i}" for i in range(40)]
-    rows = [
-        (i, " ".join(words[(i * 7 + j) % 40] for j in range(12)))
-        for i in range(120)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    labeled = docs.join(
-        hashed_linear_score(docs).select(
-            "doc_id", F.col("quality_label").cast("double").alias("label")
-        ),
-        "doc_id",
-    )
-    train = labeled.where(F.col("doc_id") % 5 != 0)
-    held = labeled.where(F.col("doc_id") % 5 == 0)
-    model = train_quality_classifier(train)
-    pred = model.transform(
-        hashed_features(held).join(held.select("doc_id", "label"), "doc_id")
-    )
-    agree = pred.where(F.col("prediction") == F.col("label")).count()
-    total = pred.count()
-    assert total > 0 and agree / total >= 0.9
 
 
 def test_wav_roundtrip_decodes_exact_samples(spark):
@@ -1751,10 +1645,11 @@ def test_jpeg_420_upsample_alignment():
 
 
 def test_mp4_box_walk_metadata():
+    from support import minimal_mp4
+
     from map_reduce_project_spark.operators.multimodal import (
         _parse_mp4,
         decode_media,
-        minimal_mp4,
     )
 
     import pytest as _pytest
@@ -1887,9 +1782,10 @@ def test_flac_stereo_decorrelation_all_assignments():
 
 
 def test_flac_verbatim_and_lpc_subframes():
+    from support import encode_flac_mono_subframe
+
     from map_reduce_project_spark.operators.multimodal import (
         decode_flac_constant,
-        encode_flac_mono_subframe,
     )
 
     samp = [((t * 37 + 11) % 4001) - 2000 for t in range(256)]

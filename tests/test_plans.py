@@ -1,4 +1,4 @@
-"""Physical-plan shape tests (map_reduce_project_spark.plans):
+"""Physical-plan shape tests (plan_inspect helpers):
 the scale contract is asserted, not hoped for. A change that silently
 de-optimizes a headline query (kills pushdown, drops a broadcast,
 adds a shuffle to the CCF loop) fails here instead of at 100 TB."""
@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from map_reduce_project_spark.graph.ccf import ccf_iterate, ccf_iterate_join
-from map_reduce_project_spark.plans import (
+from plan_inspect import (
     codegen_fraction,
     formatted_plan,
     num_exchanges,
@@ -91,7 +91,7 @@ def test_pivot_is_one_shuffle_no_distinct_job(spark, registry):
 
 def test_vector_unnest_explodes_before_single_shuffle(spark, registry):
     # posexplode is a narrow Generate; only the 64-group agg shuffles
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["q30_vector_unnest"].fn(spark, SF)
     ops = operator_counts(df)
@@ -245,7 +245,7 @@ def test_classifier_inference_is_one_shuffle_no_python(spark, registry):
     # hashed-weight lookup is map-side arithmetic: the whole scoring
     # pass is explode -> project -> partial+final agg. One exchange,
     # no Python evaluation anywhere in the plan.
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["text_quality_classifier"].fn(spark, SF)
     assert num_exchanges(df) == 1
@@ -257,7 +257,7 @@ def test_merge_upsert_is_single_join(spark, registry):
     # MERGE lowers to exactly one join (the full-outer on the merge
     # key) — a second join would mean the update/insert branches
     # re-scanned a side
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["q48_merge_upsert"].fn(spark, SF)
     joins = sum(
@@ -271,7 +271,7 @@ def test_srp_has_no_join_wider_than_broadcast(spark, registry):
     # the broadcast cross of the 16-row output-dim table (plans as
     # BroadcastNestedLoopJoin), and the sign-weighted sum is partial
     # (map-side) so the single exchange carries (id, j) partials only
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["emb_srp_project"].fn(spark, SF)
     ops = operator_counts(df)
@@ -297,7 +297,7 @@ def test_interval_overlap_join_has_no_distinct(spark, registry):
     # the overlap-start-bucket trick makes output duplicate-free by
     # construction — a Deduplicate/Distinct in the plan would mean the
     # trick regressed into a post-join dedup pass
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["range_session_blast"].fn(spark, SF)
     ops = " ".join(operator_counts(df))
@@ -316,7 +316,7 @@ def test_join_hints_select_physical_strategy(spark):
     # hint actually selects its physical operator (a silently ignored
     # hint is the failure mode — Spark drops unknown/inapplicable
     # hints without erroring)
-    from map_reduce_project_spark.plans.inspect import simple_plan
+    from plan_inspect import simple_plan
 
     left = spark.range(10_000).selectExpr("id AS k", "id % 7 AS v")
     right = spark.range(1_000).selectExpr("id AS k", "id % 5 AS w")
@@ -341,7 +341,7 @@ def test_sketch_plans_broadcast_the_sketch(spark, registry):
 def test_blocked_fuzzy_has_no_cross_join(spark, registry):
     # the scale-true ER formulation: quadratic only within a block —
     # the plan must contain a block-key equi-join and no cartesian
-    from map_reduce_project_spark.plans.inspect import simple_plan
+    from plan_inspect import simple_plan
 
     df = registry["q64_blocked_fuzzy"].fn(spark, SF)
     plan = simple_plan(df)
@@ -350,7 +350,7 @@ def test_blocked_fuzzy_has_no_cross_join(spark, registry):
 
 
 def test_bootstrap_is_zero_shuffle(spark, registry):
-    from map_reduce_project_spark.plans.inspect import num_exchanges
+    from plan_inspect import num_exchanges
 
     df = registry["sample_bootstrap"].fn(spark, SF)
     assert num_exchanges(df) == 0
@@ -365,7 +365,7 @@ def test_tpch_q74_broadcasts_dims_single_fk_shuffle(spark, registry):
 
 
 def test_tpch_q79_has_no_cartesian_and_prunes_part(spark, registry):
-    from map_reduce_project_spark.plans.inspect import simple_plan
+    from plan_inspect import simple_plan
 
     df = registry["q79_small_qty_revenue"].fn(spark, SF)
     plan = simple_plan(df)
@@ -375,7 +375,7 @@ def test_tpch_q79_has_no_cartesian_and_prunes_part(spark, registry):
 
 
 def test_new_graph_queries_have_no_cartesian(spark, registry):
-    from map_reduce_project_spark.plans.inspect import simple_plan
+    from plan_inspect import simple_plan
 
     for name in ("betweenness_evidence", "graph_walk_pairs"):
         df = registry[name].fn(spark, SF)
@@ -397,7 +397,7 @@ def test_sql_udf_inlined_no_python_boundary(spark, registry):
     # CREATE FUNCTION scalar SQL UDFs must be expanded by Catalyst
     # into plain expressions: no Python eval operator, and the whole
     # agg stays a one-shuffle hash aggregate
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["q94_sql_udf"].fn(spark, SF)
     ops = " ".join(operator_counts(df))
@@ -416,7 +416,7 @@ def test_asof_nearest_single_sorted_window_pass(spark, registry):
     # backward + forward candidates must fuse into ONE Window over
     # ONE sort (same partitioning/ordering); budget: the clicks-dedup
     # agg exchange + the window exchange
-    from map_reduce_project_spark.plans import operator_counts
+    from plan_inspect import operator_counts
 
     df = registry["asof_nearest"].fn(spark, SF)
     assert num_exchanges(df) <= 2
@@ -463,7 +463,7 @@ def test_expensive_explodes_carry_no_inferred_scan_filter(spark, registry):
     # that no Filter in these plans evaluates a higher-order
     # function: the compute must appear exactly once, in a Project
     # above the fan-out Exchange.
-    from map_reduce_project_spark.plans.inspect import formatted_plan
+    from plan_inspect import formatted_plan
 
     for name in ("dedup_winnow_pairs", "dedup_minhash_candidates",
                  "text_chunks", "decontaminate_train"):

@@ -4,10 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from map_reduce_project_spark.sources.pydatasource import (
-    register,
-    telemetry_row,
-)
+from map_reduce_project_spark.sources.pydatasource import register
+from support import telemetry_row
 
 
 def _read(spark, n_rows=500, n_parts=4):
@@ -70,7 +68,6 @@ def test_writer_two_phase_commit_leaves_no_tmp(spark, tmp_path):
     from map_reduce_project_spark.sources.pydatasource import (
         SCHEMA_DDL,
         register,
-        telemetry_row,
     )
 
     register(spark)
@@ -115,7 +112,6 @@ def test_writer_respects_dataframe_column_order_and_overwrite(spark, tmp_path):
     from map_reduce_project_spark.sources.pydatasource import (
         SCHEMA_DDL,
         register,
-        telemetry_row,
     )
 
     register(spark)
@@ -274,7 +270,6 @@ def test_telemetry_batches_bit_equal_to_scalar_rows():
     # across chunk boundaries
     from map_reduce_project_spark.sources.pydatasource import (
         telemetry_batches,
-        telemetry_row,
     )
 
     got = []

@@ -241,7 +241,7 @@ def test_cap_per_group_skew_matches_full_window(spark):
     }
     assert two_tier == full
     # and the plan only windows the hot tier: cold rows pass through
-    from map_reduce_project_spark.plans.inspect import simple_plan
+    from plan_inspect import simple_plan
 
     import re
 

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from map_reduce_project_spark.operators.scale import (
-    read_bucketed,
     salted_agg,
     salted_join,
     write_bucketed,
@@ -90,8 +89,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf0001):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = read_bucketed(spark, "b_orders").join(
-            read_bucketed(spark, "b_lineitem"), "o_orderkey"
+        joined = spark.table("b_orders").join(
+            spark.table("b_lineitem"), "o_orderkey"
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # co-located bucketed join: no Exchange feeding the SortMergeJoin
@@ -102,28 +101,6 @@ def test_bucketed_join_has_no_shuffle(spark, sf0001):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_observed_quality_single_pass(spark):
-    from map_reduce_project_spark.operators.observe import (
-        observed_filter,
-        observed_quality,
-    )
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, None)], "id long, v string"
-    )
-    out, obs = observed_quality(df, ["v"], name="q")
-    assert out.count() == 4
-    assert obs.get == {"n_rows": 4, "nulls_v": 2}
-
-    filtered, before, after = observed_filter(
-        df, F.col("v").isNotNull(), name="f"
-    )
-    assert filtered.count() == 2
-    assert before.get["n_rows"] == 4
-    assert after.get["n_rows"] == 2
 
 
 def test_bloom_prune_join_exact_and_broadcast(spark, sf001):
@@ -149,46 +126,3 @@ def test_bloom_prune_join_exact_and_broadcast(spark, sf001):
     # of the big side before the exact join)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-
-
-def test_zorder_locality_and_skipping(spark, sf001, tmp_path):
-    from map_reduce_project_spark.operators.scale import (
-        write_zordered,
-        zorder_key,
-    )
-    from map_reduce_project_spark.sources.io import read_table
-    from pyspark.sql import functions as F
-
-    # two independent dims, both bounded < 2^16
-    li = read_table(spark, sf001, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    zpath = str(tmp_path / "z")
-    rpath = str(tmp_path / "r")
-    write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=8)
-    # unordered baseline: same file count, no clustering
-    li.repartition(8).write.mode("overwrite").parquet(rpath)
-
-    def avg_span(path, col):
-        per_file = (
-            spark.read.parquet(path)
-            .withColumn("_f", F.input_file_name())
-            .groupBy("_f")
-            .agg((F.max(col) - F.min(col)).alias("span"))
-        )
-        return per_file.agg(F.avg("span")).collect()[0][0]
-
-    # z-ordered files cover a fraction of each dim's domain; random
-    # files cover essentially all of it
-    for c in ("l_partkey", "l_suppkey"):
-        assert avg_span(zpath, c) < 0.7 * avg_span(rpath, c), c
-
-    # row counts survive the layout change
-    assert spark.read.parquet(zpath).count() == li.count()
-
-    # the morton key interleaves correctly: (x=1,y=0) -> 1, (0,1) -> 2,
-    # (1,1) -> 3, (2,3) -> 0b1110 = 14
-    probe = spark.createDataFrame(
-        [(1, 0), (0, 1), (1, 1), (2, 3)], "x long, y long"
-    ).select(zorder_key(["x", "y"], bits=4).alias("z"))
-    assert [r["z"] for r in probe.collect()] == [1, 2, 3, 14]

@@ -558,18 +558,18 @@ def test_gap_session_processor_logic_without_protocol():
     assert h2.state.get() == (1000_000000, 1600_000000, 2, 4.0)
 
 
-def test_sessions_streaming_multibatch_parity(spark, sf0001):
+def test_sessions_streaming_multibatch_parity(spark, sf0001, tmp_path):
     # the cross-batch state-MERGE path (round-12): the same session
     # aggregation run over 4 time-ordered micro-batches (watermark
     # advancing between commits, session state carried across
     # batches) must converge to the identical final state as the
     # single-micro-batch gate stream — Spark's batch/streaming
     # unification, pinned where it can actually break
-    from map_reduce_project_spark.streaming.windows import (
-        stream_events_time_sliced,
-    )
+    from support import stream_events_time_sliced
 
-    sliced = stream_events_time_sliced(spark, sf0001, n_slices=4)
+    sliced = stream_events_time_sliced(
+        spark, sf0001, str(tmp_path), n_slices=4
+    )
     multi = run_stream_to_memory(
         stream_session_counts(sliced), shuffle_partitions=4
     )
