@@ -14,9 +14,15 @@ point. Structural wins over the reference (see SURVEY.md §3.4/§4):
   flags the hub-skew consequence) plus a second dedup shuffle. A
   groupBy-min + join formulation (``ccf_iterate_join``) remains for
   extreme hub skew, where AQE can split a join but not a window.
-- The convergence counter is a deterministic ``count()`` aggregate on
-  the new-pair branch, not an accumulator (Spark accumulators over-count
-  under task retry; reference CCFConnectedComponents.scala:197).
+- The convergence counter is a deterministic aggregate — the sum of
+  the dedup's per-pair new-emission counts — not an accumulator (Spark
+  accumulators over-count under task retry; reference
+  CCFConnectedComponents.scala:197).
+- Dedup before the barrier: each iteration is
+  ``ccf_dedup(iterate(state))``, so the checkpoint holds the deduped
+  pair set and the next pass reads it with no further shuffle — the
+  window path shuffles twice per iteration (window + dedup), the
+  paper's own CCF-Iterate -> CCF-Dedup pair of jobs.
 - One materialization per iteration via a lazy ``localCheckpoint``
   whose convergence count is the single action — pins the iteration
   result AND truncates lineage in ONE job. The reference's
@@ -325,14 +331,22 @@ def ccf_iterate_secondary_sort_conformance(pairs: DataFrame) -> DataFrame:
 
 
 def ccf_dedup(pairs: DataFrame) -> DataFrame:
-    """CCF-Dedup (reference O7): drop exact ordered-pair duplicates.
+    """CCF-Dedup (reference O7): one row per exact ordered pair of an
+    iterate's output.
 
-    ``dropDuplicates`` plans as partial+final HashAggregate — the same
-    physical shape as the reference Scala's map((p,null)).reduceByKey
+    Input: (src, dst, ``_ccf_new``), as every ``ccf_iterate*`` emits.
+    Output: (src, dst, ``_n`` int), where ``_n`` counts the pair's
+    ``_ccf_new`` emissions, so the iteration's new-pair count —
+    ``sum(_n)`` — still counts every emission occurrence (S4) after
+    the duplicates are gone. ``groupBy(src, dst)`` plans as
+    partial+final HashAggregate — the same physical shape as the
+    reference Scala's map((p,null)).reduceByKey
     (CCFConnectedComponents.scala:158-165), strictly better than the
     Python RDD ``distinct()``.
     """
-    return pairs.dropDuplicates(["src", "dst"]).select("src", "dst")
+    return pairs.groupBy("src", "dst").agg(
+        F.count_if(_NEW).cast("int").alias("_n")
+    )
 
 
 def _has_hub(
@@ -400,12 +414,13 @@ def connected_components(
     ``on_iteration`` carry over with the same contracts.
 
     Per iteration (graph/checkpointing.py ``fixed_point``): Iterate ->
-    lazy localCheckpoint whose new-pair count is the single
-    materializing job (pins the result and truncates lineage) -> lazy
-    dedup feeding the next pass. Stops when the new-pair count is 0
-    (the converging iteration is counted, S4). Star rounds run through
-    the same ``fixed_point`` loop, converging when the round's edge-set
-    fingerprint repeats.
+    dedup before the barrier -> lazy localCheckpoint of the deduped
+    pairs, whose new-pair count is the single materializing job (pins
+    the result and truncates lineage); the next pass and the returned
+    mapping read the checkpoint with no further shuffle. Stops when
+    the new-pair count is 0 (the converging iteration is counted,
+    S4). Star rounds run through the same ``fixed_point`` loop,
+    converging when the round's edge-set fingerprint repeats.
 
     ``skew_robust``: None (default) = autodetect — when the graph is
     large enough that a single node's adjacency could overwhelm one
@@ -542,23 +557,17 @@ def connected_components(
         )
 
         # converged when a round's fingerprint repeats the previous one
-        step, carry, measure, until = star_round, None, star_fingerprint, eq
+        step, measure, until = star_round, star_fingerprint, eq
         path = "star"
     else:
         until = None
-        # NB: deduping physically between rounds is a MEASURED win
-        # over fusing the dedup into the next window pass
-        # (adjacent-duplicate lag filter, one shuffle/round):
-        # converging CC emits the same (node, min) pair from many
-        # groups, so the carried duplicate volume costs more than the
-        # saved exchange (500k probe: 10.9s -> 15.4s fused)
-        carry = ccf_dedup
 
-        def measure(combined: DataFrame) -> dict:
-            return {"new_pairs": combined.where(F.col(_NEW)).count()}
+        def measure(deduped: DataFrame) -> dict:
+            n = deduped.agg(F.sum("_n")).collect()[0][0]
+            return {"new_pairs": n or 0}
 
         if use_secondary_sort:
-            step = (
+            iterate = (
                 ccf_iterate_secondary_sort_conformance
                 if conformance
                 else ccf_iterate_secondary_sort
@@ -573,9 +582,21 @@ def connected_components(
                 # groupBy+join formulation: AQE can skew-split the
                 # join when a hub node's adjacency would overwhelm one
                 # window partition
-                step, path = ccf_iterate_join, "join"
+                iterate, path = ccf_iterate_join, "join"
             else:
-                step, path = ccf_iterate, "window"
+                iterate, path = ccf_iterate, "window"
+
+        # NB: deduping physically every iteration is a MEASURED win
+        # over fusing the dedup into the next window pass
+        # (adjacent-duplicate lag filter, one shuffle/round):
+        # converging CC emits the same (node, min) pair from many
+        # groups, so the carried duplicate volume costs more than the
+        # saved exchange (500k probe: 10.9s -> 15.4s fused). It runs
+        # BEFORE the barrier so it is planned once: after it, each
+        # branch of the next pass's self-union would plan its own
+        # (their inferred filters differ, so no exchange reuse).
+        def step(state: DataFrame) -> DataFrame:
+            return ccf_dedup(iterate(state))
 
     # Size the loop's shuffles from the data, not from session
     # defaults (see _loop_shuffle_partitions: sqrt-of-volume optimum
@@ -606,7 +627,6 @@ def connected_components(
             pairs,
             step,
             max_steps=max_iterations,
-            carry=carry,
             measure=measure,
             until=until,
             reliable_dir=reliable_checkpoint_dir,

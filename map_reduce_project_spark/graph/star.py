@@ -22,10 +22,11 @@ are NOT comparable to CCF iteration counts; ``new_pair_counts``
 records a per-round change flag (1 = changed, 0 = fixed point), as
 the reference's emission counter has no analogue here.
 
-Physical shape per round: two single-shuffle window passes
-(large-star, small-star), one lazy localCheckpoint, and one
-fingerprint aggregate as the materializing action — 2 shuffles +
-1 job per round, rounds ~ log2(n).
+Physical shape per round: one window over one exchange per
+half-round (large-star, then small-star, each emitting through one
+conditional projection), one dedup exchange, one lazy
+localCheckpoint, and one fingerprint aggregate as the materializing
+action — 3 exchanges, 2 windows and 1 job per round, rounds ~ log2(n).
 
 - Large-star: for each node u, connect every strictly-larger neighbor
   to m = min(N(u) ∪ {u}).
@@ -73,6 +74,11 @@ def small_star(edges: DataFrame) -> DataFrame:
     Orients every edge (larger, smaller), then for each node u with
     smaller neighbors N(u) emits (u, m) and (v, m) for v ∈ N(u) \\ {m}
     where m = min(N(u)). All emitted pairs are (larger, smaller).
+
+    Both arms come out of one projection over one window, as in
+    ``ccf_iterate``: the row numbered 1 holds m itself and emits
+    (u, m); a row with dst != m emits (dst, m). The cases exclude each
+    other, so there is no union and no second evaluation of the window.
     """
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"),
@@ -85,13 +91,14 @@ def small_star(edges: DataFrame) -> DataFrame:
         F.first("dst").over(w).alias("_m"),
         F.row_number().over(w).alias("_rn"),
     )
-    key_pairs = ann.where(F.col("_rn") == 1).select(
-        "src", F.col("_m").alias("dst")
+    return ann.where(
+        (F.col("_rn") == 1) | (F.col("dst") != F.col("_m"))
+    ).select(
+        F.when(F.col("_rn") == 1, F.col("src"))
+        .otherwise(F.col("dst"))
+        .alias("src"),
+        F.col("_m").alias("dst"),
     )
-    val_pairs = ann.where(F.col("dst") != F.col("_m")).select(
-        F.col("dst").alias("src"), F.col("_m").alias("dst")
-    )
-    return key_pairs.unionAll(val_pairs)
 
 
 def star_round(pairs: DataFrame) -> DataFrame:

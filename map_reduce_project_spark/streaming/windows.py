@@ -159,7 +159,25 @@ def stream_events_with_horizon_sentinel(
     Sentinel rows are synthesized FROM the raw file's own schema (ts
     has shipped as both bigint nanos and TIMESTAMP_NTZ micros across
     testdata generations), so the directory stays homogeneous.
+
+    Raises ``ValueError`` for one sentinel batch on a session with
+    no-data micro-batches disabled: nothing would then apply the
+    sentinel's watermark, and the trailing rows it exists to release
+    would be lost without an error.
     """
+    if (
+        n_sentinel_batches == 1
+        and spark.conf.get(
+            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+        ).lower()
+        == "false"
+    ):
+        raise ValueError(
+            "one horizon sentinel batch needs the closing no-data "
+            "micro-batch to apply its watermark, but "
+            "spark.sql.streaming.noDataMicroBatches.enabled is false; "
+            "enable it or pass n_sentinel_batches=2"
+        )
     import datetime
     import glob as _glob
     import shutil as _shutil

@@ -251,7 +251,7 @@ def test_cc_conf_restored_when_a_step_raises(spark, monkeypatch):
         calls.append(1)
         if len(calls) == 2:
             raise RuntimeError("step failed")
-        return ccf.ccf_dedup(pairs).withColumn(ccf._NEW, F.lit(True))
+        return pairs.select("src", "dst").withColumn(ccf._NEW, F.lit(True))
 
     monkeypatch.setattr(ccf, "ccf_iterate", boom)
     old = {

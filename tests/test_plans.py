@@ -5,6 +5,8 @@ adds a shuffle to the CCF loop) fails here instead of at 100 TB."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from map_reduce_project_spark.graph.ccf import ccf_iterate, ccf_iterate_join
@@ -61,6 +63,54 @@ def test_ccf_iterate_is_single_shuffle(spark):
     # the skew-robust join formulation trades that for AQE-splittable
     # joins — more exchanges by design
     assert num_exchanges(ccf_iterate_join(edges)) > 1
+
+
+def test_cc_iteration_shuffles_state_once(spark, monkeypatch):
+    # Dedup runs before the barrier, so the checkpointed state is read
+    # with no shuffle: a window iteration plans the window's exchange
+    # and the dedup's, nothing else, and a join iteration plans its
+    # dedup exchange once (deduping the state lazily after the barrier
+    # planned it again under each branch of the self-union). Each
+    # iteration is the loop's own step over the state it ended on. One
+    # star round plans one window per half-round.
+    from plan_inspect import operator_counts, simple_plan
+
+    from map_reduce_project_spark.graph import checkpointing
+    from map_reduce_project_spark.graph.ccf import connected_components
+    from map_reduce_project_spark.graph.star import star_round
+
+    real, nxt = checkpointing.fixed_point, []
+
+    def spy(state, step, **kw):
+        fp = real(state, step, **kw)
+        nxt.append(step(fp.state))
+        return fp
+
+    monkeypatch.setattr(checkpointing, "fixed_point", spy)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("e", "f")],
+        "src string, dst string",
+    )
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        connected_components(edges)
+        connected_components(edges, skew_robust=True)
+        window, join = map(simple_plan, nxt)
+        assert num_exchanges(nxt[0]) == 2, window
+        dedups = re.findall(
+            r"\bExchange hashpartitioning\(src#\d+, dst#\d+, \d+\)", join
+        )
+        assert len(dedups) == 1, join
+        ckpt = spark.createDataFrame(
+            [("b", "a"), ("c", "b")], "src string, dst string"
+        ).localCheckpoint()
+        round_ = star_round(ckpt)
+        assert operator_counts(round_).get("Window", 0) == 2
+        assert num_exchanges(round_) == 3
+        ckpt.unpersist()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def test_agg_query_stays_in_codegen(spark, registry):

@@ -305,6 +305,27 @@ def test_stream_stream_left_outer_join_contract(spark, sf0001):
     assert len(old_nulls) > 0  # the assertion is not vacuous
 
 
+def test_horizon_sentinel_refuses_disabled_no_data_batches(spark, sf0001):
+    # one sentinel batch relies on the closing no-data micro-batch to
+    # apply its watermark; with those batches off the trailing rows
+    # would be dropped silently, so the helper refuses up front
+    from map_reduce_project_spark.streaming.windows import (
+        stream_events_with_horizon_sentinel,
+    )
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(ValueError, match="noDataMicroBatches"):
+            stream_events_with_horizon_sentinel(spark, sf0001)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def test_available_now_replay_is_exactly_once(spark, tmp_path):
     # the recovery contract production ETL relies on: re-starting an
     # availableNow file stream against the SAME checkpoint must add
