@@ -806,9 +806,7 @@ def sssp_int(
     # full batches observe >= max_rounds relaxations, so any instance
     # the unbatched loop could converge within budget still converges
     # (extra relaxations past the fixed point are no-ops).
-    dist = _sssp_fixed_point(
-        dist, _relax, max_rounds, ("node", "d"), invariants=(und,)
-    )
+    dist = _sssp_fixed_point(dist, _relax, max_rounds, invariants=(und,))
     out = (
         dist.select("node", F.posexplode("d").alias("idx", "dist"))
         .where(F.col("dist") < inf)
@@ -893,15 +891,14 @@ def _sssp_rows(
     # chained-relaxation barriers — same batching (and same result
     # identity / budget-parity argument) as the array path above
     return _sssp_fixed_point(
-        dist, _relax, max_rounds, ("seed", "node", "dist"), invariants=(und,)
-    )
+        dist, _relax, max_rounds, invariants=(und,)
+    ).select("seed", "node", "dist")
 
 
 def _sssp_fixed_point(
     dist: DataFrame,
     relax: Callable[[DataFrame], DataFrame],
     max_rounds: int,
-    cols: tuple[str, ...],
     invariants: tuple[DataFrame, ...],
 ) -> DataFrame:
     """Both sssp loops: ceil(max_rounds / b) barriers of b chained
@@ -915,7 +912,6 @@ def _sssp_fixed_point(
         relax,
         max_steps=-(-max_rounds // b) * b,
         per_barrier=b,
-        carry=lambda df: df.select(*cols),
         measure=_changed_rows("chg"),
         own_state=True,
         invariants=invariants,
@@ -1399,8 +1395,8 @@ def _shortest_path_counts_rows(
     """(seed, node)-keyed sigma DP — the general-k path (and the
     property-pin oracle for the array batch above)."""
     und = _node_adjacency(edges)
-    bfs = per_seed_bfs(edges, seeds, max_hops)
-    dist = bfs.localCheckpoint(eager=True)
+    # on this path per_seed_bfs returns its loop's final checkpoint
+    dist = per_seed_bfs(edges, seeds, max_hops)
 
     level = (
         dist.where(F.col("hop") == 0)
@@ -1408,7 +1404,7 @@ def _shortest_path_counts_rows(
         .withColumn("n_paths", F.lit(1).cast("long"))
     ).localCheckpoint(eager=True)
     out = level.withColumn("hop", F.lit(0).cast("long"))
-    owned = [und, bfs, dist, level]
+    owned = [und, dist, level]
     cycler = CheckpointCycler(edges.sparkSession)
     for t in range(1, max_hops + 1):
         nxt_nodes = dist.where(F.col("hop") == t).select("seed", "node")
@@ -1554,12 +1550,11 @@ def _min_reach_labels(
         _round,
         max_steps=max_iters,
         per_barrier=_RELAX_PER_BARRIER,
-        carry=lambda df: df.select("node", "lbl"),
         measure=_changed_rows("_chg"),
         own_state=True,
     )
     if res.converged:
-        return res.state
+        return res.state.select("node", "lbl")
     raise ValueError(
         f"min-label propagation did not converge within {max_iters} "
         "iterations — raise max_iters (rounds track the directed "
@@ -1858,12 +1853,11 @@ def dag_longest_path_levels(
         levels,
         _round,
         max_steps=max_iters,
-        carry=lambda df: df.select("node", "level"),
         measure=_changed_rows("_chg"),
         own_state=True,
     )
     if res.converged:
-        return res.state
+        return res.state.select("node", "level")
     raise ValueError(
         f"longest-path layering did not converge within {max_iters} "
         "rounds — the input has a cycle (not a DAG), or its depth "

@@ -252,7 +252,6 @@ def fixed_point(
     *,
     max_steps: int,
     per_barrier: int = 1,
-    carry: Callable[[DataFrame], DataFrame] | None = None,
     measure: Callable[[DataFrame], dict] | None = None,
     until: Callable[[dict, dict | None], bool] | None = None,
     reliable_dir: str | None = None,
@@ -263,9 +262,10 @@ def fixed_point(
     """Run ``step`` to a fixed point, or for ``max_steps`` steps.
 
     Each barrier chains ``min(per_barrier, steps left)`` steps lazily
-    and materializes the last; ``carry`` maps a step's output to the
-    next step's input (identity when None), so a step may emit a
-    change flag that only the measure reads. ``measure(frame)`` runs on
+    and materializes the last. A step may emit a change flag that only
+    the measure reads: the next step projects the columns it reads, so
+    column pruning drops the flag from its plan, and the caller selects
+    its columns once on the returned state. ``measure(frame)`` runs on
     the materialized frame and returns named figures; the loop stops
     when ``until(figures, previous figures)`` holds — by default when
     every figure is 0. The checkpoint is eager only when there is no
@@ -278,7 +278,6 @@ def fixed_point(
     propagate.
     """
     spark = state.sparkSession
-    carry = carry or (lambda df: df)
     until = until or (lambda figures, _prev: not any(figures.values()))
     cycler = CheckpointCycler(spark)
     if own_state:
@@ -289,7 +288,7 @@ def fixed_point(
         take = min(per_barrier, max_steps - done)
         frame = step(state)
         for _ in range(take - 1):
-            frame = step(carry(frame))
+            frame = step(frame)
         done += take
         if reliable_dir is None:
             frame = frame.localCheckpoint(eager=measure is None)
@@ -318,7 +317,7 @@ def fixed_point(
             if prev_dir is not None:
                 hadoop_delete(spark, prev_dir)
             prev_dir = it_dir
-        state = carry(frame)
+        state = frame
         if measure is not None:
             converged = until(figures, measures[-1] if measures else None)
             measures.append(figures)

@@ -572,6 +572,46 @@ def pixel_stats(media: DataFrame, decode_backend=None) -> DataFrame:
     return media.mapInPandas(process, PIXEL_STATS_SCHEMA)
 
 
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("modality", StringType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def _attach_payload_fn(gen):
+    """``attach(docs, id_col="doc_id")`` -> (doc_id, modality, payload):
+    one payload per id from the (doc_id) -> (modality, bytes) fixture
+    generator ``gen``, built by mapInPandas where the rows live, never
+    driver-side."""
+
+    def attach(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+        def process(
+            batches: Iterator[pd.DataFrame],
+        ) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                mods, payloads = [], []
+                for doc_id in pdf["doc_id"]:
+                    m, p = gen(int(doc_id))
+                    mods.append(m)
+                    payloads.append(p)
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pdf["doc_id"],
+                        "modality": mods,
+                        "payload": payloads,
+                    }
+                )
+
+        return docs.select(
+            F.col(id_col).cast("long").alias("doc_id")
+        ).mapInPandas(process, PAYLOAD_SCHEMA)
+
+    return attach
+
+
 def solid_color_image(doc_id: int, fmt: str) -> tuple[str, bytes]:
     """Deterministic REAL image bytes from an integer id: a solid-color
     w x h image as P6 PPM (even ids) or bottom-up padded 24-bit BMP
@@ -598,34 +638,12 @@ def solid_color_image(doc_id: int, fmt: str) -> tuple[str, bytes]:
     return "image/bmp", header + data
 
 
-def attach_real_image_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Manufacture REAL image payloads (PPM for even ids, BMP for odd)
-    from the id column — mapInPandas so payload construction is
-    distributed, never driver-side."""
-    id_field = StructField("doc_id", LongType())
-    gen_schema = StructType(
-        [id_field, StructField("modality", StringType()),
-         StructField("payload", BinaryType())]
-    )
+def _solid_image(doc_id: int) -> tuple[str, bytes]:
+    """PPM for even ids, BMP for odd."""
+    return solid_color_image(doc_id, "ppm" if doc_id % 2 == 0 else "bmp")
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = solid_color_image(
-                    int(doc_id), "ppm" if doc_id % 2 == 0 else "bmp"
-                )
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
 
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_image_payload = _attach_payload_fn(_solid_image)
 
 
 FRAMES_SCHEMA = StructType(
@@ -700,33 +718,12 @@ def _build_wav(samples: list[int], rate: int = AUDIO_RATE) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def attach_real_audio_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, modality, payload): one genuine PCM16 mono WAV per row,
-    samples a deterministic function of the id (the audio counterpart
-    of ``attach_real_image_payload``)."""
+def _wav_audio(doc_id: int) -> tuple[str, bytes]:
+    """One genuine PCM16 mono WAV, samples a function of the id."""
+    return "audio/wav", _build_wav(_synth_samples(doc_id))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "modality": ["audio/wav"] * len(pdf),
-                    "payload": [
-                        _build_wav(_synth_samples(int(d))) for d in pdf[id_col]
-                    ],
-                }
-            )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(build, schema)
+attach_real_audio_payload = _attach_payload_fn(_wav_audio)
 
 
 def _decode_wav_samples(b: bytes) -> tuple[int, list[int]]:
@@ -788,7 +785,6 @@ def decimate_audio(media: DataFrame, factor: int = 2) -> DataFrame:
     mapInPandas, partition-local, 1:1 rows — the resample stage of
     an audio-corpus pipeline, payload-to-payload so downstream
     stages (stats, activity, featurize) run unchanged on the output."""
-    import numpy as np
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -816,15 +812,8 @@ def decimate_audio(media: DataFrame, factor: int = 2) -> DataFrame:
                 }
             )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
     return media.select("doc_id", "modality", "payload").mapInPandas(
-        process, schema
+        process, PAYLOAD_SCHEMA
     )
 
 
@@ -843,44 +832,15 @@ def _gradient_value(doc_id: int, x: int, y: int) -> int:
     return (doc_id * 13 + x * 17 + y * 29) % 256
 
 
-def attach_gradient_image_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL P6 PPM payloads with a per-id gradient (pixel (x, y) value
-    = (id*13 + x*17 + y*29) % 256 on all channels) at the 9x8 dHash
-    comparison size — mapInPandas, payloads built where the rows
-    live."""
+def _gradient_ppm_image(doc_id: int) -> tuple[str, bytes]:
+    """P6 PPM at the 9x8 dHash comparison size: pixel (x, y) =
+    (id*13 + x*17 + y*29) % 256 on all channels."""
+    ys, xs = np.mgrid[0:DHASH_H, 0:DHASH_W]
+    v = _gradient_value(doc_id, xs, ys).astype(np.uint8)
+    return "image/x-portable-pixmap", encode_ppm(np.dstack([v, v, v]))
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                body = bytearray()
-                for y in range(DHASH_H):
-                    for x in range(DHASH_W):
-                        v = _gradient_value(int(doc_id), x, y)
-                        body += bytes((v, v, v))
-                payloads.append(
-                    f"P6\n{DHASH_W} {DHASH_H}\n255\n".encode() + bytes(body)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": ["image/x-portable-pixmap"] * len(pdf),
-                    "payload": payloads,
-                }
-            )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id")
-    ).mapInPandas(build, schema)
+attach_gradient_image_payload = _attach_payload_fn(_gradient_ppm_image)
 
 
 def image_dhash(media: DataFrame) -> DataFrame:
@@ -1498,63 +1458,10 @@ def palette_png_image(doc_id: int) -> tuple[str, bytes]:
     return "image/png", encode_palette_png(idx, palette, depth=depth)
 
 
-def attach_real_palette_png_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL indexed-color PNG payloads manufactured distributively
-    from the id column (mapInPandas, never driver-side)."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = palette_png_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_palette_png_payload = _attach_payload_fn(palette_png_image)
 
 
-def attach_real_png_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL PNG payloads manufactured distributively from the id
-    column (mapInPandas, never driver-side), gradient content so the
-    decoded channel sums are SQL-predictable."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_png_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_png_payload = _attach_payload_fn(gradient_png_image)
 
 
 # ---------------------------------------------------------------------------
@@ -1789,33 +1696,7 @@ def gradient_gif_image(doc_id: int) -> tuple[str, bytes]:
     return "image/gif", encode_gif(idx, palette)
 
 
-def attach_real_gif_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL GIF payloads manufactured distributively from the id
-    column (mapInPandas, never driver-side)."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_gif_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_gif_payload = _attach_payload_fn(gradient_gif_image)
 
 
 # ---------------------------------------------------------------------------
@@ -1873,30 +1754,26 @@ def _huff_encode_map(bits: tuple, vals: tuple) -> dict:
     return {v: (ln, c) for (ln, c), v in _huff_canonical(bits, vals).items()}
 
 
-def _jpeg_put_flat_block(
-    bw: "_JpegBitWriter",
-    dc_map: dict,
-    ac_map: dict,
-    preds: list,
-    ci: int,
-    v: int,
-    q00: int,
-) -> None:
-    """Emit one DC-only (flat) block: DC diff through the Huffman
-    table + EOB — the shared encoder step for all three DC-only
-    fixture encoders (grayscale / 1x1 color / 4:2:0), so their
-    entropy layer cannot drift apart."""
-    dc = (8 * (v - 128)) // q00
-    diff = dc - preds[ci]
-    preds[ci] = dc
+def _jpeg_put_dc(bw: "_JpegBitWriter", dc_map: dict, diff: int) -> None:
+    """One Huffman-coded DC difference: the size category's code, then
+    the amplitude bits (T.81 F.1.2.1; negatives as diff - 1)."""
     size = abs(diff).bit_length()
     ln, code = dc_map[size]
     bw.put(code, ln)
     if size:
-        amp = diff if diff > 0 else diff + (1 << size) - 1
-        bw.put(amp, size)
-    ln, code = ac_map[0x00]
-    bw.put(code, ln)
+        bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
+
+
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    """One marker segment: FF marker, big-endian length (+2), payload."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+
+# DHT body carrying the Annex K baseline tables (DC and AC, table 0)
+_JPEG_BASELINE_DHT = (
+    bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+    + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
+)
 
 
 class _JpegBitWriter:
@@ -1922,40 +1799,70 @@ class _JpegBitWriter:
         return bytes(self.out)
 
 
-def encode_jpeg_dc(gray: np.ndarray, q00: int = 8) -> bytes:
-    """(h, w) uint8 with h, w multiples of 8 and every 8x8 block
-    CONSTANT -> spec-valid baseline JFIF (grayscale, standard Annex K
-    Huffman tables). DC-only: each block encodes its DC diff plus an
-    AC end-of-block, nothing else."""
-    h, w = gray.shape
-    if h % 8 or w % 8:
-        raise ValueError("DC-only fixture needs multiple-of-8 dims")
+def encode_jpeg_dc(
+    y: np.ndarray,
+    cb: np.ndarray | None = None,
+    cr: np.ndarray | None = None,
+    *,
+    hv: tuple[int, int] = (1, 1),
+    q00: int = 8,
+) -> bytes:
+    """Block-constant planes -> spec-valid DC-only baseline JFIF
+    (standard Annex K Huffman tables): each 8x8 block encodes its DC
+    diff plus an AC end-of-block, nothing else.
+
+    Grayscale when only ``y`` is given. Otherwise one interleaved
+    Y/Cb/Cr scan with luma sampling ``hv`` = (H, V) and 1x1 chroma:
+    y is (h, w) with h a multiple of 8V and w of 8H; cb/cr are
+    (h/V, w/H). Each MCU is H x V luma blocks in raster order, then
+    Cb, then Cr, with per-component DC predictor chains. (1, 1),
+    (2, 2), (2, 1), (4, 1) and (1, 2) are 4:4:4, 4:2:0, 4:2:2, 4:1:1
+    and 4:4:0."""
+    hs, vs = hv
+    planes = (y,) if cb is None else (y, cb, cr)
+    n = len(planes)
+    if n == 1 and hv != (1, 1):
+        raise ValueError("grayscale DC-only fixture takes hv=(1, 1)")
+    h, w = y.shape
+    if h % (8 * vs) or w % (8 * hs):
+        raise ValueError(
+            f"DC-only fixture with {hs}x{vs} luma sampling needs "
+            f"h%{8 * vs}==0 and w%{8 * hs}==0 dims"
+        )
     dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    eob_ln, eob = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)[0x00]
     bw = _JpegBitWriter()
-    preds = [0]
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            _jpeg_put_flat_block(
-                bw, dc_map, ac_map, preds, 0, int(gray[by * 8, bx * 8]), q00
-            )
+    preds = [0] * n
+
+    def put_block(ci: int, v: int) -> None:
+        dc = (8 * (v - 128)) // q00
+        _jpeg_put_dc(bw, dc_map, dc - preds[ci])
+        preds[ci] = dc
+        bw.put(eob, eob_ln)
+
+    for my in range(h // (8 * vs)):
+        for mx in range(w // (8 * hs)):
+            for by in range(my * vs, my * vs + vs):
+                for bx in range(mx * hs, mx * hs + hs):
+                    put_block(0, int(y[by * 8, bx * 8]))
+            for ci in range(1, n):
+                put_block(ci, int(planes[ci][my * 8, mx * 8]))
     scan = bw.flush()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]),
+    comps = bytes([1, (hs << 4) | vs, 0])
+    comps += b"".join(bytes([ci, 0x11, 0]) for ci in range(2, n + 1))
+    sof = struct.pack(">BHHB", 8, h, w, n) + comps
+    sos = bytes([n])
+    sos += b"".join(bytes([ci, 0x00]) for ci in range(1, n + 1))
+    return (
+        b"\xff\xd8"
+        + _jpeg_seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
+        + _jpeg_seg(0xC0, sof)
+        + _jpeg_seg(0xC4, _JPEG_BASELINE_DHT)
+        + _jpeg_seg(0xDA, sos + bytes([0, 63, 0]))
+        + scan
+        + b"\xff\xd9"
     )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
 
 
 class _JpegBitReader:
@@ -2309,6 +2216,15 @@ def decode_jpeg_dc(b: bytes) -> np.ndarray:
 _PIXEL_DECODERS["image/jpeg"] = decode_jpeg_dc
 
 
+def _block_plane(h: int, w: int, f) -> np.ndarray:
+    """(h, w) uint8 plane whose 8x8 block (bx, by) is f(bx, by) % 256."""
+    out = np.empty((h, w), dtype=np.uint8)
+    for by in range(h // 8):
+        for bx in range(w // 8):
+            out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
+    return out
+
+
 def gradient_jpeg_image(doc_id: int) -> tuple[str, bytes]:
     """Deterministic block-constant grayscale JPEG: w = 8*(2+id%4),
     h = 8*(1+(id//4)%3); block (bx, by) holds (id + 11bx + 17by) %
@@ -2316,87 +2232,11 @@ def gradient_jpeg_image(doc_id: int) -> tuple[str, bytes]:
     r/g/b — SQL-predictable."""
     w = 8 * (2 + doc_id % 4)
     h = 8 * (1 + (doc_id // 4) % 3)
-    gray = np.empty((h, w), dtype=np.uint8)
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            gray[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                doc_id + 11 * bx + 17 * by
-            ) % 256
+    gray = _block_plane(h, w, lambda bx, by: doc_id + 11 * bx + 17 * by)
     return "image/jpeg", encode_jpeg_dc(gray)
 
 
-def attach_real_jpeg_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL DC-only JPEG payloads manufactured distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
-
-
-def encode_jpeg_dc_color(
-    y: np.ndarray, cb: np.ndarray, cr: np.ndarray, q00: int = 8
-) -> bytes:
-    """Block-constant YCbCr planes -> baseline JFIF with an
-    interleaved 3-component scan (1x1 sampling, shared quant and
-    Huffman tables — spec-legal). DC-only like the grayscale
-    encoder; per-component DC predictor chains."""
-    h, w = y.shape
-    if h % 8 or w % 8:
-        raise ValueError("DC-only fixture needs multiple-of-8 dims")
-    dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-    planes = (y, cb, cr)
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            for ci, plane in enumerate(planes):
-                _jpeg_put_flat_block(
-                    bw, dc_map, ac_map, preds, ci,
-                    int(plane[by * 8, bx * 8]), q00,
-                )
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
+attach_real_jpeg_payload = _attach_payload_fn(gradient_jpeg_image)
 
 
 def gradient_jpeg_color_image(doc_id: int) -> tuple[str, bytes]:
@@ -2407,46 +2247,13 @@ def gradient_jpeg_color_image(doc_id: int) -> tuple[str, bytes]:
     so per-channel sums are SQL-predictable."""
     w = 8 * (2 + doc_id % 3)
     h = 8 * (1 + (doc_id // 3) % 2)
-
-    def plane(f):
-        out = np.empty((h, w), dtype=np.uint8)
-        for by in range(h // 8):
-            for bx in range(w // 8):
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
-        return out
-
-    y = plane(lambda bx, by: doc_id + 23 * bx + 41 * by)
-    cb = plane(lambda bx, by: 3 * doc_id + 29 * bx + 7 * by)
-    cr = plane(lambda bx, by: 5 * doc_id + 13 * bx + 31 * by)
-    return "image/jpeg", encode_jpeg_dc_color(y, cb, cr)
+    y = _block_plane(h, w, lambda bx, by: doc_id + 23 * bx + 41 * by)
+    cb = _block_plane(h, w, lambda bx, by: 3 * doc_id + 29 * bx + 7 * by)
+    cr = _block_plane(h, w, lambda bx, by: 5 * doc_id + 13 * bx + 31 * by)
+    return "image/jpeg", encode_jpeg_dc(y, cb, cr)
 
 
-def attach_real_jpeg_color_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL color DC-only JPEG payloads manufactured distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_color_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_jpeg_color_payload = _attach_payload_fn(gradient_jpeg_color_image)
 
 
 # ---------------------------------------------------------------------------
@@ -3081,65 +2888,11 @@ def gradient_mjpeg_video(doc_id: int) -> tuple[str, bytes]:
     n_frames = 2 + doc_id % 3
     jpegs = []
     for f in range(n_frames):
-        gray = np.empty((h, w), dtype=np.uint8)
-        for by in range(h // 8):
-            for bx in range(w // 8):
-                gray[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    doc_id + 11 * bx + 17 * by + 7 * f
-                ) % 256
+        gray = _block_plane(
+            h, w, lambda bx, by: doc_id + 11 * bx + 17 * by + 7 * f
+        )
         jpegs.append(encode_jpeg_dc(gray))
     return "video/x-mjpeg", encode_avi_mjpeg(jpegs, w, h)
-
-
-def encode_jpeg_dc_420(
-    y: np.ndarray, cb: np.ndarray, cr: np.ndarray, q00: int = 8
-) -> bytes:
-    """Block-constant planes -> baseline JFIF with a 4:2:0 interleaved
-    scan: y is (h, w) with h, w multiples of 16 and constant 8x8
-    blocks; cb/cr are (h/2, w/2) with constant 8x8 blocks (one chroma
-    block per 16x16 luma macroblock). MCU order: 4 Y blocks in 2x2
-    raster, then Cb, then Cr — per-component DC predictor chains."""
-    h, w = y.shape
-    if h % 16 or w % 16:
-        raise ValueError("4:2:0 fixture needs multiple-of-16 dims")
-    dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        _jpeg_put_flat_block(bw, dc_map, ac_map, preds, ci, v, q00)
-
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            for blk in range(4):
-                oy = my * 16 + (blk // 2) * 8
-                ox = mx * 16 + (blk % 2) * 8
-                put_block(0, int(y[oy, ox]))
-            put_block(1, int(cb[my * 8, mx * 8]))
-            put_block(2, int(cr[my * 8, mx * 8]))
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
 
 
 def gradient_jpeg_420_image(doc_id: int) -> tuple[str, bytes]:
@@ -3149,46 +2902,13 @@ def gradient_jpeg_420_image(doc_id: int) -> tuple[str, bytes]:
     Cb = (3id + 17cx) % 256, Cr = (5id + 27cy) % 256."""
     w = 16 * (1 + doc_id % 3)
     h = 16 * (1 + (doc_id // 3) % 2)
-
-    def plane(hh, ww, f):
-        out = np.empty((hh, ww), dtype=np.uint8)
-        for by in range(hh // 8):
-            for bx in range(ww // 8):
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
-        return out
-
-    y = plane(h, w, lambda bx, by: doc_id + 9 * bx + 21 * by)
-    cb = plane(h // 2, w // 2, lambda cx, cy: 3 * doc_id + 17 * cx)
-    cr = plane(h // 2, w // 2, lambda cx, cy: 5 * doc_id + 27 * cy)
-    return "image/jpeg", encode_jpeg_dc_420(y, cb, cr)
+    y = _block_plane(h, w, lambda bx, by: doc_id + 9 * bx + 21 * by)
+    cb = _block_plane(h // 2, w // 2, lambda cx, cy: 3 * doc_id + 17 * cx)
+    cr = _block_plane(h // 2, w // 2, lambda cx, cy: 5 * doc_id + 27 * cy)
+    return "image/jpeg", encode_jpeg_dc(y, cb, cr, hv=(2, 2))
 
 
-def attach_real_jpeg_420_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL 4:2:0 DC-only JPEG payloads manufactured distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_420_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_jpeg_420_payload = _attach_payload_fn(gradient_jpeg_420_image)
 
 
 def _parse_mp4(b: bytes) -> dict:
@@ -3316,15 +3036,8 @@ def encode_jpeg_gray_coeffs(
             mcu += 1
             flat = coef.reshape(-1)
             zz = [int(flat[_JPEG_ZIGZAG[k]]) for k in range(64)]
-            diff = zz[0] - pred
+            _jpeg_put_dc(bw, dc_map, zz[0] - pred)
             pred = zz[0]
-            mag = abs(diff)
-            size = mag.bit_length()
-            ln, code = dc_map[size]
-            bw.put(code, ln)
-            if size:
-                amp = diff if diff > 0 else diff + (1 << size) - 1
-                bw.put(amp, size)
             run = 0
             last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
             for k in range(1, last_nz + 1):
@@ -3347,29 +3060,35 @@ def encode_jpeg_gray_coeffs(
     scan_parts.append(bw.flush())
     scan = b"".join(scan_parts)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
+    dqt = _jpeg_seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
         if restart_interval
         else b""
     )
-    sof = seg(
+    sof = _jpeg_seg(
         0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
     )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+    dht = _jpeg_seg(0xC4, _JPEG_BASELINE_DHT)
+    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
     return b"\xff\xd8" + dqt + dri + sof + dht + sos + scan + b"\xff\xd9"
+
+
+def _ac_fixture_blocks(doc_id: int) -> list[list[np.ndarray]]:
+    """2x3 rows of sparse quantized coefficient blocks for the AC and
+    progressive JPEG fixtures."""
+    blocks = []
+    for by in range(2):
+        row = []
+        for bx in range(3):
+            coef = np.zeros((8, 8), dtype=np.int64)
+            coef[0, 0] = (doc_id + 13 * bx + 29 * by) % 256 - 128
+            coef[0, 1] = (3 * doc_id + 7 * bx) % 64 - 32
+            coef[1, 0] = (5 * doc_id + 11 * by) % 64 - 32
+            coef.reshape(-1)[_JPEG_ZIGZAG[40]] = doc_id % 16 + 1
+            row.append(coef)
+        blocks.append(row)
+    return blocks
 
 
 def gradient_jpeg_ac_image(doc_id: int) -> tuple[str, bytes]:
@@ -3382,48 +3101,12 @@ def gradient_jpeg_ac_image(doc_id: int) -> tuple[str, bytes]:
     predictor resets WITHOUT touching the oracle (pixels are framing-
     independent). The defined integer IDCT is replayed term by
     term."""
-    blocks = []
-    for by in range(2):
-        row = []
-        for bx in range(3):
-            coef = np.zeros((8, 8), dtype=np.int64)
-            coef[0, 0] = (doc_id + 13 * bx + 29 * by) % 256 - 128
-            coef[0, 1] = (3 * doc_id + 7 * bx) % 64 - 32
-            coef[1, 0] = (5 * doc_id + 11 * by) % 64 - 32
-            coef.reshape(-1)[_JPEG_ZIGZAG[40]] = doc_id % 16 + 1
-            row.append(coef)
-        blocks.append(row)
     return "image/jpeg", encode_jpeg_gray_coeffs(
-        blocks, q00=1, restart_interval=2
+        _ac_fixture_blocks(doc_id), q00=1, restart_interval=2
     )
 
 
-def attach_real_jpeg_ac_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL AC-bearing JPEG payloads manufactured distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_ac_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_jpeg_ac_payload = _attach_payload_fn(gradient_jpeg_ac_image)
 
 
 # --- Progressive tier: real SOF2 decode — spectral selection,
@@ -3595,13 +3278,6 @@ def encode_jpeg_progressive_gray(
         for coef in row
     ]
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
     scans = []
     for ss, se, ah, al in _JPEG_PROG_SCRIPT:
         bw = _JpegBitWriter()
@@ -3610,14 +3286,8 @@ def encode_jpeg_progressive_gray(
                 preds = [0]
                 for zz in zzs:
                     t = zz[0] >> al  # arithmetic shift per G.1.2.1
-                    diff = t - preds[0]
+                    _jpeg_put_dc(bw, dc_map, t - preds[0])
                     preds[0] = t
-                    size = abs(diff).bit_length()
-                    ln, code = dc_map[size]
-                    bw.put(code, ln)
-                    if size:
-                        amp = diff if diff > 0 else diff + (1 << size) - 1
-                        bw.put(amp, size)
             else:
                 for zz in zzs:
                     bw.put((zz[0] >> al) & 1, 1)
@@ -3629,12 +3299,12 @@ def encode_jpeg_progressive_gray(
                 else:
                     _encode_ac_refine_block(bw, ac_map, st, zz, ss, se, al)
             _emit_eobrun(bw, ac_map, st)  # scan-end flush
-        sos = seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
+        sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
         scans.append(sos + bw.flush())
 
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht = seg(
+    dqt = _jpeg_seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
+    sof = _jpeg_seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
+    dht = _jpeg_seg(
         0xC4,
         bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
         + bytes([0x10])
@@ -3893,47 +3563,14 @@ def gradient_jpeg_progressive_image(doc_id: int) -> tuple[str, bytes]:
     through the 6-scan script. Progressive coding is lossless over
     quantized coefficients, so decoded pixels — and therefore the SQL
     oracle — are bit-identical to the baseline AC fixture's."""
-    blocks = []
-    for by in range(2):
-        row = []
-        for bx in range(3):
-            coef = np.zeros((8, 8), dtype=np.int64)
-            coef[0, 0] = (doc_id + 13 * bx + 29 * by) % 256 - 128
-            coef[0, 1] = (3 * doc_id + 7 * bx) % 64 - 32
-            coef[1, 0] = (5 * doc_id + 11 * by) % 64 - 32
-            coef.reshape(-1)[_JPEG_ZIGZAG[40]] = doc_id % 16 + 1
-            row.append(coef)
-        blocks.append(row)
-    return "image/jpeg", encode_jpeg_progressive_gray(blocks, q00=1)
-
-
-def attach_real_jpeg_progressive_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL progressive (SOF2) JPEG payloads manufactured
-    distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
+    return "image/jpeg", encode_jpeg_progressive_gray(
+        _ac_fixture_blocks(doc_id), q00=1
     )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_progressive_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
 
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_real_jpeg_progressive_payload = _attach_payload_fn(
+    gradient_jpeg_progressive_image
+)
 
 
 def encode_flac_fixed(
@@ -4221,54 +3858,6 @@ def stereo_flac_audio(doc_id: int) -> tuple[str, bytes]:
         left, right, modes[doc_id % 4]
     )
 
-def encode_jpeg_dc_422(
-    y: np.ndarray, cb: np.ndarray, cr: np.ndarray, q00: int = 8
-) -> bytes:
-    """Block-constant planes -> baseline JFIF with a 4:2:2 interleaved
-    scan: y is (h, w) with h a multiple of 8 and w a multiple of 16,
-    constant 8x8 blocks; cb/cr are (h, w/2) with constant 8x8 blocks
-    (one chroma block per 16x8 luma strip). MCU order: 2 Y blocks side
-    by side, then Cb, then Cr — per-component DC predictor chains."""
-    h, w = y.shape
-    if h % 8 or w % 16:
-        raise ValueError("4:2:2 fixture needs h%8==0 and w%16==0 dims")
-    dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        _jpeg_put_flat_block(bw, dc_map, ac_map, preds, ci, v, q00)
-
-    for my in range(h // 8):
-        for mx in range(w // 16):
-            for blk in range(2):
-                put_block(0, int(y[my * 8, mx * 16 + blk * 8]))
-            put_block(1, int(cb[my * 8, mx * 8]))
-            put_block(2, int(cr[my * 8, mx * 8]))
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x21, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
 
 def gradient_jpeg_422_image(doc_id: int) -> tuple[str, bytes]:
     """Deterministic block-constant 4:2:2 JPEG: w = 16*(1+id%3),
@@ -4278,144 +3867,13 @@ def gradient_jpeg_422_image(doc_id: int) -> tuple[str, bytes]:
     Cr = (5id + 23cy + 11cx) % 256."""
     w = 16 * (1 + doc_id % 3)
     h = 8 * (1 + (doc_id // 3) % 2)
-
-    def plane(hh, ww, f):
-        out = np.empty((hh, ww), dtype=np.uint8)
-        for by in range(hh // 8):
-            for bx in range(ww // 8):
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
-        return out
-
-    y = plane(h, w, lambda bx, by: doc_id + 9 * bx + 21 * by)
-    cb = plane(h, w // 2, lambda cx, cy: 3 * doc_id + 13 * cx + 7 * cy)
-    cr = plane(h, w // 2, lambda cx, cy: 5 * doc_id + 23 * cy + 11 * cx)
-    return "image/jpeg", encode_jpeg_dc_422(y, cb, cr)
+    y = _block_plane(h, w, lambda bx, by: doc_id + 9 * bx + 21 * by)
+    cb = _block_plane(h, w // 2, lambda cx, cy: 3 * doc_id + 13 * cx + 7 * cy)
+    cr = _block_plane(h, w // 2, lambda cx, cy: 5 * doc_id + 23 * cy + 11 * cx)
+    return "image/jpeg", encode_jpeg_dc(y, cb, cr, hv=(2, 1))
 
 
-def attach_real_jpeg_422_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL 4:2:2 DC-only JPEG payloads manufactured distributively."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_jpeg_422_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
-
-
-def encode_jpeg_dc_411(
-    y: np.ndarray, cb: np.ndarray, cr: np.ndarray, q00: int = 8
-) -> bytes:
-    """Block-constant planes -> baseline JFIF with a 4:1:1 interleaved
-    scan (the DV-camcorder layout): y is (h, w) with h a multiple of 8
-    and w a multiple of 32, constant 8x8 blocks; cb/cr are (h, w/4)
-    with constant 8x8 blocks (one chroma block per 32x8 luma strip).
-    MCU order: 4 Y blocks side by side, then Cb, then Cr."""
-    h, w = y.shape
-    if h % 8 or w % 32:
-        raise ValueError("4:1:1 fixture needs h%8==0 and w%32==0 dims")
-    dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        _jpeg_put_flat_block(bw, dc_map, ac_map, preds, ci, v, q00)
-
-    for my in range(h // 8):
-        for mx in range(w // 32):
-            for blk in range(4):
-                put_block(0, int(y[my * 8, mx * 32 + blk * 8]))
-            put_block(1, int(cb[my * 8, mx * 8]))
-            put_block(2, int(cr[my * 8, mx * 8]))
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x41, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def encode_jpeg_dc_440(
-    y: np.ndarray, cb: np.ndarray, cr: np.ndarray, q00: int = 8
-) -> bytes:
-    """Block-constant planes -> baseline JFIF with a 4:4:0 interleaved
-    scan (transposed 4:2:2): y is (h, w) with h a multiple of 16 and w
-    a multiple of 8, constant 8x8 blocks; cb/cr are (h/2, w) with
-    constant 8x8 blocks (one chroma block per 8x16 luma column). MCU
-    order: 2 Y blocks stacked, then Cb, then Cr."""
-    h, w = y.shape
-    if h % 16 or w % 8:
-        raise ValueError("4:4:0 fixture needs h%16==0 and w%8==0 dims")
-    dc_map = _huff_encode_map(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_map = _huff_encode_map(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        _jpeg_put_flat_block(bw, dc_map, ac_map, preds, ci, v, q00)
-
-    for my in range(h // 16):
-        for mx in range(w // 8):
-            for blk in range(2):
-                put_block(0, int(y[my * 16 + blk * 8, mx * 8]))
-            put_block(1, int(cb[my * 8, mx * 8]))
-            put_block(2, int(cr[my * 8, mx * 8]))
-    scan = bw.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(payload) + 2)
-            + payload
-        )
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([q00] * 64))
-    sof = seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x12, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + sos + scan + b"\xff\xd9"
+attach_real_jpeg_422_payload = _attach_payload_fn(gradient_jpeg_422_image)
 
 
 def gradient_jpeg_411_image(doc_id: int) -> tuple[str, bytes]:
@@ -4425,18 +3883,13 @@ def gradient_jpeg_411_image(doc_id: int) -> tuple[str, bytes]:
     Cb = (3id + 13cx + 5cy) % 256, Cr = (5id + 11cx + 3cy) % 256."""
     w = 32 * (1 + doc_id % 2)
     h = 8 * (1 + (doc_id // 2) % 3)
+    y = _block_plane(h, w, lambda bx, by: doc_id + 7 * bx + 19 * by)
+    cb = _block_plane(h, w // 4, lambda cx, cy: 3 * doc_id + 13 * cx + 5 * cy)
+    cr = _block_plane(h, w // 4, lambda cx, cy: 5 * doc_id + 11 * cx + 3 * cy)
+    return "image/jpeg", encode_jpeg_dc(y, cb, cr, hv=(4, 1))
 
-    def plane(hh, ww, f):
-        out = np.empty((hh, ww), dtype=np.uint8)
-        for by in range(hh // 8):
-            for bx in range(ww // 8):
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
-        return out
 
-    y = plane(h, w, lambda bx, by: doc_id + 7 * bx + 19 * by)
-    cb = plane(h, w // 4, lambda cx, cy: 3 * doc_id + 13 * cx + 5 * cy)
-    cr = plane(h, w // 4, lambda cx, cy: 5 * doc_id + 11 * cx + 3 * cy)
-    return "image/jpeg", encode_jpeg_dc_411(y, cb, cr)
+attach_real_jpeg_411_payload = _attach_payload_fn(gradient_jpeg_411_image)
 
 
 def gradient_jpeg_440_image(doc_id: int) -> tuple[str, bytes]:
@@ -4446,57 +3899,12 @@ def gradient_jpeg_440_image(doc_id: int) -> tuple[str, bytes]:
     Cb = (3id + 7cx + 17cy) % 256, Cr = (5id + 13cx + 27cy) % 256."""
     w = 8 * (1 + doc_id % 3)
     h = 16 * (1 + (doc_id // 3) % 2)
-
-    def plane(hh, ww, f):
-        out = np.empty((hh, ww), dtype=np.uint8)
-        for by in range(hh // 8):
-            for bx in range(ww // 8):
-                out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = f(bx, by) % 256
-        return out
-
-    y = plane(h, w, lambda bx, by: doc_id + 23 * bx + 9 * by)
-    cb = plane(h // 2, w, lambda cx, cy: 3 * doc_id + 7 * cx + 17 * cy)
-    cr = plane(h // 2, w, lambda cx, cy: 5 * doc_id + 13 * cx + 27 * cy)
-    return "image/jpeg", encode_jpeg_dc_440(y, cb, cr)
+    y = _block_plane(h, w, lambda bx, by: doc_id + 23 * bx + 9 * by)
+    cb = _block_plane(h // 2, w, lambda cx, cy: 3 * doc_id + 7 * cx + 17 * cy)
+    cr = _block_plane(h // 2, w, lambda cx, cy: 5 * doc_id + 13 * cx + 27 * cy)
+    return "image/jpeg", encode_jpeg_dc(y, cb, cr, hv=(1, 2))
 
 
-def _attach_payload_fn(gen):
-    """Shared mapInPandas payload manufacturer for a (doc_id) ->
-    (modality, bytes) fixture generator."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def attach(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        def process(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                mods, payloads = [], []
-                for doc_id in pdf["doc_id"]:
-                    m, p = gen(int(doc_id))
-                    mods.append(m)
-                    payloads.append(p)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "modality": mods,
-                        "payload": payloads,
-                    }
-                )
-
-        return docs.select(
-            F.col(id_col).cast("long").alias("doc_id")
-        ).mapInPandas(process, gen_schema)
-
-    return attach
-
-
-attach_real_jpeg_411_payload = _attach_payload_fn(gradient_jpeg_411_image)
 attach_real_jpeg_440_payload = _attach_payload_fn(gradient_jpeg_440_image)
 
 
@@ -4540,14 +3948,7 @@ def encode_exif_jpeg(
         + struct.pack(e + "I", 0)
         + data
     )
-    app1 = b"Exif\x00\x00" + tiff
-    return (
-        b"\xff\xd8"
-        + b"\xff\xe1"
-        + struct.pack(">H", len(app1) + 2)
-        + app1
-        + b"\xff\xd9"
-    )
+    return b"\xff\xd8" + _jpeg_seg(0xE1, b"Exif\x00\x00" + tiff) + b"\xff\xd9"
 
 
 def decode_exif(b: bytes) -> dict:
@@ -4682,30 +4083,4 @@ def gradient_interlace_png_image(doc_id: int) -> tuple[str, bytes]:
     return "image/png", encode_png16(px16)
 
 
-def attach_interlace_png_payload(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Adam7 / 16-bit PNG payloads manufactured distributively from
-    the id column (mapInPandas, never driver-side)."""
-    gen_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mods, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                m, p = gradient_interlace_png_image(int(doc_id))
-                mods.append(m)
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "modality": mods, "payload": payloads}
-            )
-
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).mapInPandas(
-        process, gen_schema
-    )
+attach_interlace_png_payload = _attach_payload_fn(gradient_interlace_png_image)

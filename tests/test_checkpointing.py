@@ -200,7 +200,7 @@ _JOBS = {
     "per_seed_bfs": 13,
     "per_seed_bfs_rows": 12,
     "shortest_path_counts": 18,
-    "shortest_path_counts_rows": 25,
+    "shortest_path_counts_rows": 24,
     "k_truss": 6,
     "bpe_train": 4,
 }

@@ -1443,7 +1443,7 @@ def test_jpeg_color_dc_fixed_point_conversion():
 
     from map_reduce_project_spark.operators.multimodal import (
         decode_jpeg_dc,
-        encode_jpeg_dc_color,
+        encode_jpeg_dc,
     )
 
     h, w = 16, 24
@@ -1458,7 +1458,7 @@ def test_jpeg_color_dc_fixed_point_conversion():
     y = plane(lambda bx, by: 40 + 50 * bx + 30 * by)
     cb = plane(lambda bx, by: 10 + 70 * bx)
     cr = plane(lambda bx, by: 200 + 90 * by)
-    px = decode_jpeg_dc(encode_jpeg_dc_color(y, cb, cr))
+    px = decode_jpeg_dc(encode_jpeg_dc(y, cb, cr))
 
     def expect(Y, Cb, Cr):
         c_b, c_r = Cb - 128, Cr - 128
@@ -1619,7 +1619,6 @@ def test_jpeg_420_upsample_alignment():
 
     from map_reduce_project_spark.operators.multimodal import (
         decode_jpeg_dc,
-        encode_jpeg_dc_420,
         gradient_jpeg_420_image,
     )
 

@@ -28,13 +28,19 @@ Usage:
     python tools/determinism_check.py [sf_dir] [query ...]
 
 Exit code 0 iff every checked query hashes identically in both passes.
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/determinism_check.py``.
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from tools.oracle_check import canon_pdf, value_hash  # noqa: E402
 

@@ -16,16 +16,22 @@ Every draw must pass rows + columns + order-insensitive value hash,
 the same canon as the driver gate (reused from tools/oracle_check.py).
 
 Usage: python tools/fuzz_capstone.py [sf_dir]   (default sf0.001)
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/fuzz_capstone.py``.
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from tools.oracle_check import canon_pdf, value_hash  # noqa: E402
 

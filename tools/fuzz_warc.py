@@ -23,6 +23,10 @@ then asserts:
 
 Usage: python tools/fuzz_warc.py [sf_dir]    (default sf0.001)
 Commit the output as tools/logs/fuzz_warc_r{N}.log.
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/fuzz_warc.py``.
 """
 
 from __future__ import annotations
@@ -34,8 +38,10 @@ import os
 import shutil
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from map_reduce_project_spark import get_spark  # noqa: E402
 from map_reduce_project_spark.sources.warc import (  # noqa: E402

@@ -21,17 +21,23 @@ which stringifies differently from Spark's int64) and crashes on
 array-typed cells exactly like the driver does.
 
 Exit code 0 iff every checked query matches.
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/oracle_check.py``.
 """
 
 from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from map_reduce_project_spark import get_spark  # noqa: E402
 from map_reduce_project_spark.queries import all_queries  # noqa: E402

@@ -15,6 +15,10 @@ that caused it.
 
 Usage:
     python tools/plan_census.py [sf_dir] [query ...]
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/plan_census.py``.
 """
 
 from __future__ import annotations
@@ -24,7 +28,8 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 BASELINE = Path(__file__).with_name("plans_baseline.json")
 

@@ -18,13 +18,19 @@ a recurrence of the filter-inlining class trips it.
 
 Usage: python tools/plan_size_audit.py [sf_dir]   (default sf0.001)
 Commit the output as tools/logs/plan_size_audit_r{N}.log.
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/plan_size_audit.py``.
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from map_reduce_project_spark import get_spark  # noqa: E402
 from map_reduce_project_spark.queries import all_queries  # noqa: E402

@@ -17,6 +17,10 @@ Usage:
 Wall semantics: per rep, build the DataFrame fresh (construction-time
 actions included — they are part of what a caller pays) and noop-write
 it. Prints min/median of reps per query plus a total.
+
+The package is imported from this checkout (the parent of tools/);
+Spark's Python workers need the same root on PYTHONPATH, e.g.
+``PYTHONPATH=. python tools/time_query.py``.
 """
 
 from __future__ import annotations
@@ -24,8 +28,10 @@ from __future__ import annotations
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from map_reduce_project_spark import get_spark  # noqa: E402
 from map_reduce_project_spark.queries import all_queries  # noqa: E402
@@ -70,8 +76,6 @@ def main() -> int:
             walls.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
         if plans_dir:
-            from pathlib import Path
-
             p = Path(plans_dir)
             p.mkdir(parents=True, exist_ok=True)
             df = registry[name].fn(spark, sf_dir)
